@@ -66,6 +66,15 @@ def tree_cpu_s() -> float:
     return total / clk
 
 
+def host_cpu_ticks() -> tuple[int, int]:
+    """(steal, total) clock ticks of all CPUs since boot, from /proc/stat.
+    Steal is time the hypervisor gave this machine's CPUs to someone else."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:]]
+    # user nice system idle iowait irq softirq steal [guest guest_nice]
+    return ticks[7], sum(ticks[:8])
+
+
 def tree_peak_rss_mb() -> float:
     """Sum over the live process tree of each process's peak RSS (VmHWM)."""
     kb = 0
@@ -88,16 +97,6 @@ def tree_peak_rss_mb() -> float:
 
 def median(xs) -> float:
     return float(statistics.median(xs)) if xs else 0.0
-
-
-def tail(xs) -> tuple[float | None, float | None, int]:
-    """(value, percentile, n): the highest percentile that still has at
-    least ten samples above it; None when there are fewer than 11 samples."""
-    s = sorted(xs)
-    n = len(s)
-    if n < 11:
-        return None, None, n
-    return float(s[n - 11]), 100.0 * (n - 10) / n, n
 
 
 def union_length(intervals) -> float:
@@ -379,13 +378,22 @@ class SparkAccounting:
         self.sc = sc
         self.base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
         self.listener = _PhaseListener()
+        self.manager = None
+        self.listening = False
         try:
             from pyspark.java_gateway import ensure_callback_server_started
 
             ensure_callback_server_started(sc._gateway)
-            spark._jsparkSession.listenerManager().register(self.listener)
+            self.manager = spark._jsparkSession.listenerManager()
         except Exception as ex:  # noqa: BLE001
             print(f"perfbench: Catalyst phase listener unavailable: {ex!r}", file=sys.stderr)
+
+    def listen(self, on: bool) -> None:
+        """Register or unregister the Catalyst phase listener, so that an
+        operation timed with tracing off does not pay its callbacks."""
+        if self.manager is not None and on != self.listening:
+            (self.manager.register if on else self.manager.unregister)(self.listener)
+            self.listening = on
 
     def _get(self, path: str):
         with urllib.request.urlopen(self.base + path, timeout=60) as r:

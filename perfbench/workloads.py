@@ -69,8 +69,8 @@ class _Base:
     def kernel_replay_s(self) -> float:
         return 0.0
 
-    def info(self, results: list) -> dict:
-        """Extra printed figures: {name: (value, unit)}."""
+    def info(self, res: dict) -> dict:
+        """Extra printed figures of an operation: {name: (value, unit)}."""
         return {}
 
 
@@ -141,7 +141,9 @@ class RegionKFused(_Base):
     buildings per cell and 16×16 regions (153,600 buildings, 256 regions,
     7,314 blocks). Inputs are persisted during set-up; the seed fixes the
     row order inside each partition of the persisted inputs, which is the
-    order rows reach the grouped kernel."""
+    order rows reach the grouped kernel. One operation is one fused pass,
+    collected; the first pass of a session includes the JIT and Python
+    worker warm-up that every batch job submitted to a new session pays."""
 
     name = "region_k_fused"
     NX, PER_CELL, GX = 80, 24, 16
@@ -186,12 +188,6 @@ class RegionKFused(_Base):
             df = fused_blocks_k(*self.inputs, self.res, keep_status=True)
         with self.span("fused.execute"):
             return df.select("block_id", "complexity", "status").collect()
-
-    def warm(self) -> None:
-        """One pass of the measured query, unchecked: the first pass of a
-        session is slower (JIT, worker start-up) and users of a long-lived
-        session do not pay it per job."""
-        self._collect()
 
     def op(self) -> dict:
         c0, t0 = H.tree_cpu_s(), time.perf_counter()
@@ -331,10 +327,6 @@ class PipelineResume(_Base):
         self.regions = sorted(r["gadm"] for r in self.inputs[1].select("gadm").collect())
         self.input_bytes = H.dir_stats(self.input_dir)[1]
 
-    def warm(self) -> None:
-        """Nothing: the fresh run is measured as the first pipeline of the
-        session, the way every CLI invocation runs it."""
-
     def instrument(self) -> list:
         from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 
@@ -432,11 +424,11 @@ class PipelineResume(_Base):
             _complain(f"{self.name}: {b}")
         return (3 if bad else 0), n_blocks
 
-    def info(self, results: list) -> dict:
+    def info(self, res: dict) -> dict:
         return {
-            "resume_s": (H.median([r["resume_s"] for r in results]), "s"),
-            "noop_resume_s": (H.median([r["noop_s"] for r in results]), "s"),
-            "write_amp": (H.median([r["write_amp"] for r in results]), "ratio"),
+            "resume_s": (res["resume_s"], "s"),
+            "noop_resume_s": (res["noop_s"], "s"),
+            "write_amp": (res["write_amp"], "ratio"),
         }
 
     def kernel_replay_s(self) -> float:
@@ -453,8 +445,8 @@ class PipelineResume(_Base):
 class PointJoinMix(_Base):
     """A closed loop: one client issues a seeded sequence of spatial queries
     against the 256 region polygons of the 80×80 world and waits for each
-    answer before sending the next. One operation is a round of the four
-    query kinds in a seeded order:
+    answer before sending the next, starting right after the session is set
+    up. One operation is a round of the four query kinds in a seeded order:
 
     * pip    — uniform probes, sjoin.pip_join on the broadcast path;
     * hot    — pip_join with broadcast_build=False and salting, 70% of the
@@ -599,18 +591,20 @@ class PointJoinMix(_Base):
                 return False
         return True
 
-    def _query(self, kind: str, rng) -> tuple[int, float, bool]:
+    def _query(self, kind: str, rng) -> tuple[int, float, float, bool]:
+        """(probes, query seconds, query CPU seconds of the process tree, ok);
+        probe generation and the numpy checks fall outside both windows."""
         with self.span("client.generate"):
             if kind in ("pip", "hot"):
                 pdf, i, j = self._region_probes(rng, self.N_PIP if kind == "pip" else self.N_HOT,
                                                 kind == "hot")
             else:
                 pdf = self._uniform_probes(rng, self.N_KNN if kind == "knn" else self.N_RADIUS)
-        t0 = time.perf_counter()
+        c0, t0 = H.tree_cpu_s(), time.perf_counter()
         with self.span(f"query.{kind}"):
             out = self._pip(pdf, kind == "hot") if kind in ("pip", "hot") else self._knn(
                 pdf, kind == "radius")
-        dt = time.perf_counter() - t0
+        dt, cpu = time.perf_counter() - t0, H.tree_cpu_s() - c0
         with self.span("client.check"):
             if kind in ("pip", "hot"):
                 ok = self._check_counts(out, i, j)
@@ -620,21 +614,14 @@ class PointJoinMix(_Base):
                 ok = self._check_radius(out, pdf, rng)
         if not ok:
             _complain(f"{self.name}: {kind} query result differs from the numpy reference")
-        return len(pdf), dt, ok
+        return len(pdf), dt, cpu, ok
 
-    def warm(self) -> None:
-        """One full round with its own seed stream, not counted."""
-        rng = np.random.default_rng([self.seed, 1])
-        for kind in self.KINDS:
-            self._query(kind, rng)
-
-    def info(self, results: list) -> dict:
-        queries = [x for r in results for x in r["query_s"]]
-        tv, tp, n = H.tail(queries)
+    def info(self, res: dict) -> dict:
+        n = len(res["query_s"])
         return {
-            "query_p50_ms": (1000 * H.median(queries), f"ms (n={n})"),
-            "query_tail_ms": (1000 * tv, f"ms (p{tp:.0f} of n={n})") if tv is not None
-            else (None, f"ms (n={n} < 11 samples)"),
+            "query_p50_ms": (1000 * H.median(res["query_s"]), f"ms (n={n})"),
+            # the highest percentile with ten samples above it needs 11
+            "query_tail_ms": (None, f"ms (n={n} queries, fewer than 11)"),
         }
 
     def instrument(self) -> list:
@@ -646,24 +633,24 @@ class PointJoinMix(_Base):
         rng = np.random.default_rng([self.seed, 2, self.round])
         self.round += 1
         kinds = [self.KINDS[k] for k in rng.permutation(len(self.KINDS))]
-        c0 = H.tree_cpu_s()
-        items, lats, failed, per_kind = 0, [], 0, {}
+        items, lats, cpu, failed, per_kind = 0, [], 0.0, 0, {}
         for kind in kinds:
             try:
-                n, dt, ok = self._query(kind, rng)
+                n, dt, dc, ok = self._query(kind, rng)
             except Exception:  # noqa: BLE001 - a raising query counts as failed, the loop goes on
                 traceback.print_exc()
                 failed += 1
                 continue
             items += n
             lats.append(dt)
+            cpu += dc
             per_kind[kind] = dt
             failed += int(not ok)
         # a round's mean query latency: the round always holds one query
         # of each kind, so unlike a median over mixed kinds it does not jump
         # between kinds from run to run
         return {
-            "items": items, "pass_s": sum(lats), "cpu_s": H.tree_cpu_s() - c0,
+            "items": items, "pass_s": sum(lats), "cpu_s": cpu,
             "latency_s": sum(lats) / len(lats) if lats else 0.0,
             "query_s": lats, "per_kind": per_kind,
             "attempted": len(kinds), "failed": failed,

@@ -36,12 +36,10 @@ from dataclasses import dataclass
 
 import numpy as np
 
-try:  # optional C inner loops (see kernels/planar_fast.c); pure-numpy fallback
-    from .kernels import planar_fast as _PF
-except Exception:  # pragma: no cover - missing/incompatible build
-    _PF = None
-if _PF is not None and not hasattr(_PF, "pip_ray"):  # stale .so
-    _PF = None
+from .kernels import load_native
+
+# optional C inner loops (see kernels/planar_fast.c); pure-numpy fallback
+_PF = load_native("geom", "pip_ray")
 
 POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING, MULTIPOLYGON = 1, 2, 3, 4, 5, 6
 

@@ -40,6 +40,8 @@ from itertools import chain
 import networkx as nx
 import numpy as np
 
+from . import load_native
+
 QUANTUM = 1e-9  # coordinate snap for node identity during noding
 
 # Optional C inner loops (kernels/planar_fast.c, built by
@@ -48,12 +50,9 @@ QUANTUM = 1e-9  # coordinate snap for node identity during noding
 # stays in Python (math.hypot is correctly rounded; C libm's is not
 # guaranteed), the C side only runs the identical mul/add/sub/div
 # sequence, compiled with -ffp-contract=off so no FMA re-rounding.
-# Import failure (other platform, missing build) silently falls back —
-# tests/test_planar.py asserts C == Python whenever the module loads.
-try:  # pragma: no cover - exercised via test_planar's equivalence sweep
-    from . import planar_fast as _CF
-except Exception:  # noqa: BLE001
-    _CF = None
+# Import failure (other platform, missing build) falls back with a warning
+# — tests/test_planar.py asserts C == Python whenever the module loads.
+_CF = load_native("kernels.planar")
 
 
 # ---------------------------------------------------------------------------

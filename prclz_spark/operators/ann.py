@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType
 
+from ..kernels import load_native
+
 
 def _planes(n_planes: int, dim: int, seed: int = 7) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -139,12 +141,8 @@ def ann_lsh_topk(
 # --- IVF tier ---------------------------------------------------------------
 
 
-try:  # optional C inner loop (kernels/planar_fast.c); numpy fallback below
-    from ..kernels import planar_fast as _PF
-except Exception:  # pragma: no cover - missing/incompatible build
-    _PF = None
-if _PF is not None and not hasattr(_PF, "assign_nearest"):  # stale .so
-    _PF = None
+# optional C inner loop (kernels/planar_fast.c); numpy fallback below
+_PF = load_native("operators.ann", "assign_nearest")
 
 
 def _assign_nearest(X: np.ndarray, cents: np.ndarray, chunk: int = 1024) -> np.ndarray:

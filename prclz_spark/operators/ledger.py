@@ -8,11 +8,11 @@ equivalent: a Parquet ledger table
 
     (stage, partition_key, status, n_rows, wall_ms, attempt, ts)
 
-written after each stage's partition completes; a restart anti-joins the
-stage input against the ledger's done-keys (`left_anti`) so only missing
-partitions recompute. This is finer-grained than the reference's
-per-country files and it is the mechanism that makes the 10^12-row job
-restartable per BASELINE.json north_rule.
+appended after each stage's output is written; a restart reads it once and
+recomputes only the work that is not yet recorded as ok (the caller decides
+what a key belongs to; see `pipeline.py`). This is finer-grained than the
+reference's per-country files and it is the mechanism that makes the
+10^12-row job restartable per BASELINE.json north_rule.
 """
 
 from __future__ import annotations
@@ -22,6 +22,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+SCHEMA = (
+    "stage string, partition_key string, status string, n_rows long, "
+    "wall_ms double, attempt int, ts double"
+)
+_ROW_COLS = ["stage", "partition_key", "status", "n_rows", "wall_ms"]
 
 
 class Ledger:
@@ -34,61 +40,26 @@ class Ledger:
             f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
         )
 
-    def done_keys(self, stage: str) -> DataFrame:
+    def filter_pending(self, summarize) -> list:
+        """The one ledger read of a resume: the ok rows, reduced in Spark by
+        the caller's `summarize` (DataFrame -> DataFrame; the caller owns the
+        key format), then collected. Empty when nothing is recorded yet."""
         if not self._exists():
-            return self.spark.createDataFrame([], "partition_key string")
-        return (
-            self.spark.read.parquet(self.path)
-            .filter((F.col("stage") == stage) & (F.col("status") == "ok"))
-            .select("partition_key")
-            .distinct()
-        )
+            return []
+        ok = self.spark.read.schema(SCHEMA).parquet(self.path).filter(F.col("status") == "ok")
+        return summarize(ok).collect()
 
-    def filter_pending(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
-        """Checkpoint resume: drop partitions already recorded as done."""
-        done = self.done_keys(stage).withColumnRenamed("partition_key", key_col)
-        return df.join(done, key_col, "left_anti")
+    def record(self, rows: DataFrame) -> None:
+        """Append ledger rows (stage, partition_key, status, n_rows, wall_ms)."""
+        rows.select(*_ROW_COLS).withColumn("attempt", F.lit(1)).withColumn(
+            "ts", F.lit(time.time())
+        ).write.mode("append").parquet(self.path)
 
-    def record(self, stage: str, results: DataFrame, key_col: str) -> None:
-        """Append ok-rows for every key present in `results` (with metrics)."""
-        now = time.time()
-        rows = (
-            results.groupBy(F.col(key_col).alias("partition_key"))
-            .agg(F.count("*").alias("n_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("status", F.lit("ok"))
-            .withColumn("wall_ms", F.lit(None).cast("double"))
-            .withColumn("attempt", F.lit(1))
-            .withColumn("ts", F.lit(now))
-            .select("stage", "partition_key", "status", "n_rows", "wall_ms", "attempt", "ts")
-        )
-        rows.write.mode("append").parquet(self.path)
-
-    def record_errors(self, stage: str, keys: list, error: str = "kernel") -> None:
-        if not keys:
-            return
-        now = time.time()
-        rows = self.spark.createDataFrame(
-            [(stage, k, "error", 0, None, 1, now) for k in keys],
-            "stage string, partition_key string, status string, n_rows long, wall_ms double, attempt int, ts double",
-        )
-        rows.write.mode("append").parquet(self.path)
-
-
-def run_stage(
-    ledger: Ledger,
-    stage: str,
-    inputs: DataFrame,
-    key_col: str,
-    fn,
-    out_path: str | None = None,
-) -> DataFrame:
-    """Resume-aware stage driver: pending = inputs ∖ done; fn(pending) → out;
-    optionally write partitioned parquet; record ledger rows."""
-    pending = ledger.filter_pending(inputs, stage, key_col)
-    out = fn(pending)
-    if out_path is not None:
-        out.write.mode("append").partitionBy(key_col).parquet(out_path)
-        out = ledger.spark.read.parquet(out_path)
-    ledger.record(stage, out, key_col)
-    return out
+    def record_errors(self, stage: str, keys: list) -> None:
+        """Mark `keys` of `stage` as failed, so a resume retries them (for
+        callers of the operators with ``keep_status=True``)."""
+        if keys:
+            self.record(self.spark.createDataFrame(
+                [(stage, k, "error", 0, None) for k in keys],
+                "stage string, partition_key string, status string, n_rows long, wall_ms double",
+            ))

@@ -3,6 +3,7 @@
 import csv
 import sys
 from collections import Counter
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -501,3 +502,44 @@ def test_c_weak_dual_k_matches_python():
         pts = rng.uniform(0, 1, size=(npts, 2))
         g0 = P.s0_graph(ring, pts)
         assert py_k(g0) == c_k(g0), trial
+
+
+def test_native_fallback_is_loud(monkeypatch, caplog):
+    """A planar_fast import failure (or a stale build) falls back with a
+    warning and a log line, never silently; here the module loads."""
+    import logging
+
+    from prclz_spark import kernels as K
+
+    assert K.load_native("test-user", "pip_ray") is not None
+    with pytest.warns(RuntimeWarning, match="stale build"):
+        assert K.load_native("test-user", "no_such_entry_point") is None
+    monkeypatch.setitem(sys.modules, "prclz_spark.kernels.planar_fast", None)
+    with caplog.at_level(logging.WARNING, logger="prclz_spark.kernels"):
+        with pytest.warns(RuntimeWarning, match="pure-Python fallback"):
+            assert K.load_native("test-user") is None
+    assert any("test-user" in r.getMessage() for r in caplog.records)
+
+
+def test_native_fallback_warns_at_every_import_site():
+    """The three import sites (kernels.planar, geom, operators.ann) warn when
+    the C module fails to import, in a fresh interpreter."""
+    import subprocess
+
+    code = (
+        "import sys, warnings\n"
+        "sys.modules['prclz_spark.kernels.planar_fast'] = None\n"
+        "with warnings.catch_warnings(record=True) as w:\n"
+        "    warnings.simplefilter('always')\n"
+        "    import prclz_spark.kernels.planar as P, prclz_spark.geom as G\n"
+        "    import prclz_spark.operators.ann as A\n"
+        "assert P._CF is None and G._PF is None and A._PF is None\n"
+        "print(sorted(str(x.message).split(':')[0] for x in w\n"
+        "             if 'planar_fast' in str(x.message)))\n"
+    )
+    root = str(Path(__file__).resolve().parent.parent)
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "['geom', 'kernels.planar', 'operators.ann']"

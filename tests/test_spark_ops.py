@@ -129,14 +129,18 @@ def test_ledger_resume(spark, tmp_path):
     from prclz_spark.operators.ledger import Ledger
 
     led = Ledger(spark, str(tmp_path / "ledger"))
-    inp = spark.createDataFrame([(f"k{i}",) for i in range(10)], "partition_key string")
-    pend = led.filter_pending(inp.withColumnRenamed("partition_key", "gadm"), "s1", "gadm")
-    assert pend.count() == 10
-    done = spark.createDataFrame([(f"k{i}", 1) for i in range(4)], "gadm string, n int")
-    led.record("s1", done, "gadm")
-    pend2 = led.filter_pending(inp.withColumnRenamed("partition_key", "gadm"), "s1", "gadm")
-    assert pend2.count() == 6
-    assert set(r.gadm for r in pend2.collect()) == {f"k{i}" for i in range(4, 10)}
+    keys = lambda ok: ok.filter(F.col("stage") == "s1").select("partition_key")  # noqa: E731
+    assert led.filter_pending(keys) == []
+    led.record(spark.createDataFrame(
+        [("s1", f"k{i}", "ok", 1, 1.0) for i in range(4)] + [("s2", "k9", "ok", 1, 1.0)],
+        "stage string, partition_key string, status string, n_rows long, wall_ms double",
+    ))
+    led.record_errors("s1", ["k4"])
+    done = {r.partition_key for r in led.filter_pending(keys)}
+    assert done == {f"k{i}" for i in range(4)}  # the error row is not done
+    assert [f"k{i}" for i in range(10) if f"k{i}" not in done] == [f"k{i}" for i in range(4, 10)]
+    rows = spark.read.parquet(led.path)
+    assert rows.count() == 6 and rows.filter("attempt = 1 and ts > 0").count() == 6
 
 
 def test_salting_balances_hot_cell(spark):

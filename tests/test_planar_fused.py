@@ -162,6 +162,35 @@ def test_block_complexity_fast_equals_python_end_to_end():
         assert P.block_complexity(ring, pts) == _k_python(ring, pts), trial
 
 
+# Pinned outputs over 16 seeds × 25 seeded worlds: sha256 of every k as
+# little-endian int16, and sha256 of every kept _s0_rings ring's float64
+# bytes in order. The fast==python fuzz above cannot see both paths shift
+# together; these digests can.
+PIN_K_SHA256 = "38d72dcec093cd2f1746fa8ed4e6b6a48684cc7da23876b405333894f45f5a2b"
+PIN_RINGS_SHA256 = "71b712bf8c150bc231dda2b76a6b778dccbb8f7adb743f147d64e7213a07d1e1"
+PIN_K_SUM = 1313
+
+
+@pytest.mark.parametrize("native", [True, False], ids=["native", "python"])
+def test_seeded_world_outputs_pinned(monkeypatch, native):
+    import hashlib
+
+    if not native:
+        monkeypatch.setattr(P, "_CF", None)
+    ks = []
+    h_rings = hashlib.sha256()
+    for seed in range(16):
+        rng = np.random.default_rng(1000 + seed)
+        for trial in range(25):
+            ring, pts = _world(rng, trial)
+            ks.append(P.block_complexity(ring, pts))
+            for rg in P._s0_rings(ring, pts):
+                h_rings.update(np.ascontiguousarray(rg, dtype=np.float64).tobytes())
+    assert sum(ks) == PIN_K_SUM
+    assert hashlib.sha256(np.asarray(ks, dtype="<i2").tobytes()).hexdigest() == PIN_K_SHA256
+    assert h_rings.hexdigest() == PIN_RINGS_SHA256
+
+
 def test_block_complexity_fallback_on_nonstandard_config():
     # ablation configs must keep taking the Python path (same answers)
     pts = np.random.default_rng(12).uniform(0, 1, size=(12, 2))

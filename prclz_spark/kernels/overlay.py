@@ -275,51 +275,6 @@ def union_n(geoms: list) -> G.Geom | None:
     return res
 
 
-def intersect_local(a: G.Geom, b: G.Geom) -> G.Geom | None:
-    """a ∩ b where a is SMALL relative to b: only b's boundary segments
-    overlapping a's bbox enter the noding (segments wholly outside a can
-    never border the intersection), the containment predicates stay exact
-    on the full geometries. Block-scale fast path for per-cell clips."""
-    xmin, ymin, xmax, ymax = G.bounds(a)
-    segs_a = _segs_of(_poly_rings(a))
-    segs_b_all = np.vstack(_segs_of(_poly_rings(b)))
-    sx0 = np.minimum(segs_b_all[:, 0], segs_b_all[:, 2])
-    sx1 = np.maximum(segs_b_all[:, 0], segs_b_all[:, 2])
-    sy0 = np.minimum(segs_b_all[:, 1], segs_b_all[:, 3])
-    sy1 = np.maximum(segs_b_all[:, 1], segs_b_all[:, 3])
-    m = (sx0 <= xmax) & (sx1 >= xmin) & (sy0 <= ymax) & (sy1 >= ymin)
-    segs = np.vstack(segs_a + [segs_b_all[m]]) if m.any() else np.vstack(segs_a)
-    pieces = node_segments(segs)
-    in_a = _contains_batch(a)
-    in_b = _contains_batch(b)
-
-    def pred_batch(xs, ys):
-        return in_a(xs, ys) & in_b(xs, ys)
-
-    return _region_from_predicate(pieces, pred_batch=pred_batch)
-
-
-def heal_ring(ring) -> G.Geom | None:
-    """GEOS buffer(0)-equivalent for one (possibly self-intersecting,
-    bowtie, spiked, or partially-chained) closed ring: node the boundary
-    against itself and reconstruct the even-odd interior. Bowties come out
-    as both lobes (MultiPolygon), zero-area garbage comes out None —
-    matching shapely's `Polygon(vs).buffer(0)` healing the reference leans
-    on at `prclz/_complexity.py:33`."""
-    import numpy as np
-
-    ring = np.asarray(ring, dtype=np.float64)
-    if len(ring) < 4:
-        return None
-    pieces = node_segments(np.hstack([ring[:-1], ring[1:]]))
-    rg = G.Geom(G.POLYGON, [ring])
-
-    def pred_batch(xs, ys):
-        return G.points_in_polygon_bulk(np.asarray(xs), np.asarray(ys), rg)
-
-    return _region_from_predicate(pieces, pred_batch=pred_batch)
-
-
 def buffer(g: G.Geom, d: float) -> G.Geom | None:
     """Round-join buffer as a morphological op with a POLYGONAL structuring
     element (per-edge rectangles + per-vertex k-gons, k = ARC_SEGS): the

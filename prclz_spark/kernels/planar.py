@@ -16,10 +16,10 @@ the semantics of:
   segments the second disjunct is unsatisfiable (a non-point intersection of
   two segments implies overlapping interiors, so `touches` is False), so the
   effective semantics — reproduced here — is: two faces are adjacent iff
-  they share an identical undirected edge; and every face is adjacent to
+  they share an identical undirected edge. Every face is also adjacent to
   itself (the rtree `nearest` candidate list includes the query face), so
-  every dual node carries a self-loop. Both details matter for the
-  weak-dual sequence length.
+  every reference dual node carries a self-loop; only the terminal effect
+  of those self-loops is reproduced (weak_dual_sequence_len).
 * Voronoi s0 approximation        — /root/reference/prclz/_complexity.py:16-45
   (pytess.voronoi → keep non-boundary anchors with >2 vertices → intersect
   with block → on multi-part keep the part containing the anchor)
@@ -400,98 +400,6 @@ def _cluster_vertices(pts: np.ndarray, eps: float) -> np.ndarray:
     return np.array([find(i) for i in range(n)])
 
 
-INSERT_EPS = 1e-11  # vertex-on-edge tolerance: float-dust scale ONLY.
-# GEOS computes a shared intersection point once (exact), so two cells'
-# copies coincide to ~1e-13 of a degree; real gaps at the 1e-8 SNAP scale
-# are geometry GEOS would keep apart — inserting across them manufactures
-# shared vertices, and the weak dual (faces-sharing-a-VERTEX) then
-# over-connects (measured: k jumps of +2..+4 on detailed blocks).
-
-
-def graph_from_rings(rings, eps: float = SNAP, insert_on_edges: bool = False) -> nx.Graph:
-    """Rings share nodes by coordinate identity — the node-dedup behavior of
-    `PlanarGraph.from_polygons` (topology.py:193-204). pytess emits each
-    shared Voronoi vertex once (exact float match); our cells are clipped
-    independently, so two consistency repairs restore the shared-topology
-    property GEOS gives the reference for free:
-
-    1. eps-close vertices are clustered to a representative (as before);
-    2. (opt-in via ``insert_on_edges=True``; default OFF — the production
-       s0 config measured it off, see S0_CFG["insert"])
-       vertex-on-edge insertion: a canonical vertex lying within eps of the
-       INTERIOR of another ring's edge splits that edge. Without this, two
-       cells' copies of the same boundary can subdivide differently (one
-       cell's clip kept a block vertex the other's dropped), leaving
-       dust-separated parallel chains whose crossings spawn phantom sliver
-       faces — the round-2 DJI ±1 mechanism (e.g. 3-cell blocks losing the
-       shared circumcenter ⇒ weak dual path instead of triangle)."""
-    if not rings:
-        return nx.Graph()
-    all_pts = np.vstack([np.asarray(r, dtype=np.float64) for r in rings])
-    rep = _cluster_vertices(all_pts, eps)
-    canon = [
-        (float(all_pts[rep[i], 0]), float(all_pts[rep[i], 1])) for i in range(len(all_pts))
-    ]
-    edges = set()
-    off = 0
-    for ring in rings:
-        m = len(ring)
-        for i in range(m - 1):
-            a = canon[off + i]
-            b = canon[off + i + 1]
-            if a != b:
-                edges.add((a, b) if a <= b else (b, a))
-        off += m
-    g = nx.Graph()
-    if not insert_on_edges:
-        for a, b in edges:
-            g.add_edge(a, b)
-        return g
-    verts = np.asarray(sorted({c for c in canon}), dtype=np.float64)
-    vx, vy = verts[:, 0], verts[:, 1]
-    ieps = INSERT_EPS
-    for a, b in edges:
-        ax, ay = a
-        bx, by = b
-        dx, dy = bx - ax, by - ay
-        l2 = dx * dx + dy * dy
-        # candidates: vertices within the edge bbox (+ieps)
-        lo_x, hi_x = min(ax, bx) - ieps, max(ax, bx) + ieps
-        lo_y, hi_y = min(ay, by) - ieps, max(ay, by) + ieps
-        mask = (vx >= lo_x) & (vx <= hi_x) & (vy >= lo_y) & (vy <= hi_y)
-        if mask.any():
-            cx = vx[mask] - ax
-            cy = vy[mask] - ay
-            t = (cx * dx + cy * dy) / l2
-            # perpendicular distance via the cross product
-            dist = np.abs(cx * dy - cy * dx) / np.sqrt(l2)
-            inner = (t > 1e-12) & (t < 1 - 1e-12) & (dist <= ieps)
-            if inner.any():
-                idx = np.nonzero(mask)[0][inner]
-                order = np.argsort(t[inner], kind="stable")
-                chain = [a] + [
-                    (float(verts[i, 0]), float(verts[i, 1])) for i in idx[order]
-                ] + [b]
-                for u, w in zip(chain[:-1], chain[1:]):
-                    if u != w:
-                        g.add_edge(u, w)
-                continue
-        g.add_edge(a, b)
-    return g
-
-
-def rotation_embedding(g: nx.Graph) -> dict:
-    """Neighbors of each node sorted by atan2(dx, dy) — the exact key the
-    reference uses (topology.py:305-313; note x-first atan2)."""
-    return {
-        node: sorted(
-            g.neighbors(node),
-            key=lambda nb, node=node: math.atan2(nb[0] - node[0], nb[1] - node[1]),
-        )
-        for node in g.nodes()
-    }
-
-
 def trace_faces(g: nx.Graph) -> list:
     """All faces as directed-edge cycles; the caller drops the outer face.
 
@@ -605,13 +513,6 @@ def weak_dual(g: nx.Graph, faces=None) -> nx.Graph:
         faces = inner_faces(g)
     edge_sets = [face_undirected_edges(f) for f in faces]
     cents = [face_centroid(f) for f in faces]
-    # Reference-faithful option (S0_CFG['selfloops']): the reference
-    # compares each face against its rtree `nearest` list, which INCLUDES
-    # the face itself (distance 0) — the set intersection is then the
-    # face's full edge set, so every face gets a SELF-LOOP at its centroid
-    # (topology.py:365-375). Termination still holds: trace_faces returns
-    # [] below 2 nodes, so isolated self-looped faces die one level later.
-    selfloops = S0_CFG.get("selfloops", False)
     # edge-indexed adjacency (round-8): invert edge → faces once instead of
     # the O(F²) pairwise set intersections; the dual-edge SET is identical
     # and pairs are inserted in the same ascending (i, j) order the pairwise
@@ -631,8 +532,6 @@ def weak_dual(g: nx.Graph, faces=None) -> nx.Graph:
     for i, j in pairs:
         by_i.setdefault(i, []).append(j)
     for i in range(len(faces)):
-        if selfloops:
-            dual.add_edge(cents[i], cents[i])
         for j in sorted(by_i.get(i, ())):
             dual.add_edge(cents[i], cents[j])
     return dual
@@ -652,15 +551,14 @@ def weak_dual_sequence_len(g0: nx.Graph, max_k: int = 64) -> int:
     self-pairs everywhere measurably over-extends sequences on our graphs
     (our deeper duals fragment differently than the reference's), but this
     terminal case is exact: +1 iff the final level has exactly one unpaired
-    face. Golden-fixture effect: +12 net exact blocks
-    (tools/dji_ablate.py; trade detailed in ROADMAP.md)."""
-    if _CF is not None and not S0_CFG.get("selfloops", False):
+    face. Golden-fixture effect: +12 net exact blocks (scored by
+    tools/dji_kernel_replay.py)."""
+    if _CF is not None:
         # whole sequence in C (planar_fast.weak_dual_k): same rotation
         # system (libm atan2 == math.atan2), same seed/len-sort orders,
         # same centroid arithmetic and nx node-identity semantics —
         # asserted graph-for-graph against this Python loop in
-        # tests/test_planar.py. The selfloops ablation mode keeps the
-        # Python path.
+        # tests/test_planar.py.
         nodes = list(g0.nodes())
         index = {nd: i for i, nd in enumerate(nodes)}
         xs = [float(nd[0]) for nd in nodes]
@@ -1299,36 +1197,25 @@ def voronoi_pytess(anchors: np.ndarray) -> list:
     pts = np.asarray(uniq)
     xmin, ymin = pts.min(axis=0)
     xmax, ymax = pts.max(axis=0)
-    # pytess's actual dummy-site layout (buffer_percent=100): four MID-SIDE
-    # points — (min-x - width, ȳ), (max-x + width, ȳ), (x̄, min-y - height),
-    # (x̄, max-y + height) — with the perpendicular coordinate at the MEAN
-    # of the real sites (pytess `bufferbox`; its corner variant is
-    # commented out in the library). The dummy layout decides how the
+    # Dummy sites: the four CORNERS of the anchor bbox buffered by 100%.
+    # pytess itself (`bufferbox`, buffer_percent=100) uses four MID-SIDE
+    # points at the mean of the real sites; its corner variant is
+    # commented out in the library. The dummy layout decides how the
     # outermost real cells are truncated, which for sparse blocks reaches
-    # deep into the block interior — corner dummies (the r2 approximation)
-    # truncate differently and cost golden parity.
+    # deep into the block interior. Together with the arrangement union
+    # and the canonicalized cells, corner dummies scored more blocks exact
+    # against the golden DJI fixture than the mid-side layout, so corner
+    # is the layout that runs (the C s0_segs path uses the same corners).
     xbuff = xmax - xmin
     ybuff = ymax - ymin
-    midx = float(pts[:, 0].mean())
-    midy = float(pts[:, 1].mean())
-    if S0_CFG["dummies"] == "corner":
-        dummies = np.array(
-            [
-                [xmin - xbuff, ymin - ybuff],
-                [xmax + xbuff, ymin - ybuff],
-                [xmax + xbuff, ymax + ybuff],
-                [xmin - xbuff, ymax + ybuff],
-            ]
-        )
-    else:
-        dummies = np.array(
-            [
-                [xmin - xbuff, midy],
-                [xmax + xbuff, midy],
-                [midx, ymin - ybuff],
-                [midx, ymax + ybuff],
-            ]
-        )
+    dummies = np.array(
+        [
+            [xmin - xbuff, ymin - ybuff],
+            [xmax + xbuff, ymin - ybuff],
+            [xmax + xbuff, ymax + ybuff],
+            [xmin - xbuff, ymax + ybuff],
+        ]
+    )
     allp = np.vstack([pts, dummies])
     # huge frame: pytess cells are circumcenter polygons with no frame at
     # all; any real site interior to the dummy hull has a bounded cell, so
@@ -1415,27 +1302,16 @@ def voronoi_pytess(anchors: np.ndarray) -> list:
     return out
 
 
-# s0-construction configuration (ablation-tunable; production values are
-# the DJI-golden-parity optimum measured by tools/dji_ablate.py:
-# single-arrangement union of canonicalized cells, corner dummies, no dual
-# self-loops — 138/196 exact vs the golden fixture at kernel level, up
-# from 135 in round 2).
-PYTESS_PAIR_ASPECT = 0.6
+# The s0 construction is one fixed configuration: corner dummies, cell
+# vertices canonicalized across cells, clip outputs snapped back to them,
+# one noded arrangement over all kept rings, and no dual self-loops. It is
+# the construction that scored best against the golden DJI fixture (see
+# tools/dji_kernel_replay.py); the C s0_segs path implements the same one.
 
-S0_CFG = {
-    "dummies": "corner",   # empirically beats pytess's mid-side layout here
-    "canon": True,         # unify dust-duplicate cell vertices across cells
-    "snap": True,          # snap clip outputs back to canonical cell verts
-    "cluster": SNAP,       # graph vertex clustering eps (non-arrangement)
-    "insert": False,       # vertex-on-edge insertion (non-arrangement)
-    "arrangement": True,   # one noded arrangement over all kept rings
-    "selfloops": False,    # reference code implies self-pairs; measured off
-    # two-anchor pytess float-degeneracy threshold (None disables the rule).
-    # Fitted on the 16 two-building DJI golden blocks (margin [0.568,
-    # 0.617], see _pytess_pair_degenerate); gated here so deployments
-    # outside that fixture's geometry can turn it off per-run.
-    "pair_aspect": PYTESS_PAIR_ASPECT,
-}
+# Two-anchor pytess float-degeneracy threshold, fitted on the 16
+# two-building DJI golden blocks (margin [0.568, 0.617], see
+# _pytess_pair_degenerate).
+PYTESS_PAIR_ASPECT = 0.6
 
 
 def _canonicalize_cells(cells: list, eps: float = SNAP) -> list:
@@ -1504,9 +1380,7 @@ def _s0_rings(block_ring: np.ndarray, centroids: np.ndarray, boundary_set=None) 
     rings = []
     from .. import geom as _G
 
-    cells = voronoi_pytess(centroids)
-    if S0_CFG["canon"]:
-        cells = _canonicalize_cells(cells)
+    cells = _canonicalize_cells(voronoi_pytess(centroids))
     canon = np.vstack([c for (_a, c) in cells]) if cells else np.zeros((0, 2))
     for (cx, cy), cell in cells:
         if (cx, cy) in boundary_set or len(cell) <= 3:
@@ -1514,8 +1388,7 @@ def _s0_rings(block_ring: np.ndarray, centroids: np.ndarray, boundary_set=None) 
         inter = clip_convex(block_ring, cell)
         if len(inter) < 4:
             continue
-        if S0_CFG["snap"]:
-            inter = _snap_to_canon(inter, canon)
+        inter = _snap_to_canon(inter, canon)
         parts = split_ring_parts(inter)
         if len(parts) <= 1:
             rings.append(inter if not parts else parts[0])
@@ -1542,25 +1415,19 @@ def s0_graph(block_ring: np.ndarray, centroids: np.ndarray, boundary_set=None) -
     opposite-oriented edges — they differ in dust there too, and the
     weak dual's shared-EDGE adjacency never unifies them)."""
     rings = _s0_rings(block_ring, centroids, boundary_set)
-    if S0_CFG.get("arrangement"):
-        # single noded arrangement over every kept ring: shared boundaries
-        # are computed once (QUANTUM snap merges the two cells' dust-apart
-        # copies into identical pieces), so the union graph is sliver-free
-        # and chains are exactly shared — the property JTS's normalized
-        # robust intersection gives the reference's per-cell overlays.
-        segs = []
-        for rg in rings:
-            rg = np.asarray(rg, dtype=np.float64)
-            if len(rg) >= 2:
-                segs.append(np.hstack([rg[:-1], rg[1:]]))
-        if not segs:
-            return nx.Graph()
-        return graph_from_segments(node_segments(np.vstack(segs)))
-    if S0_CFG["cluster"] is None:
-        return graph_from_rings_exact(rings)
-    return graph_from_rings(
-        rings, eps=S0_CFG["cluster"], insert_on_edges=S0_CFG["insert"]
-    )
+    # single noded arrangement over every kept ring: shared boundaries
+    # are computed once (QUANTUM snap merges the two cells' dust-apart
+    # copies into identical pieces), so the union graph is sliver-free
+    # and chains are exactly shared — the property JTS's normalized
+    # robust intersection gives the reference's per-cell overlays.
+    segs = []
+    for rg in rings:
+        rg = np.asarray(rg, dtype=np.float64)
+        if len(rg) >= 2:
+            segs.append(np.hstack([rg[:-1], rg[1:]]))
+    if not segs:
+        return nx.Graph()
+    return graph_from_segments(node_segments(np.vstack(segs)))
 
 
 def _pytess_pair_degenerate(centroids: np.ndarray) -> bool:
@@ -1568,9 +1435,9 @@ def _pytess_pair_degenerate(centroids: np.ndarray) -> bool:
 
     pytess's dummy sites scale with the anchor extent: for a pair, the
     mid-side bufferbox collapses toward the pair's own line as the pair
-    flattens, and Fortune's float sweep (near-parallel bisectors rejected
-    below an absolute 1e-10 determinant; see kernels/fortune.py) stops
-    producing bounded cells — pytess then returns unbounded/partial chains
+    flattens, and pytess's float Fortune sweep (which rejects near-parallel
+    bisectors below an absolute 1e-10 determinant) stops producing bounded
+    cells — pytess then returns unbounded/partial chains
     that `Polygon(vs).buffer(0)` heals to nothing, so the reference's s0 is
     EMPTY and k=0.
 
@@ -1586,10 +1453,8 @@ def _pytess_pair_degenerate(centroids: np.ndarray) -> bool:
     0.3%). The production threshold 0.6 sits mid-margin [0.568, 0.617]; the
     exact breakpoint is a float artifact of the original implementation and
     is not recoverable without bit-level replay (documented in
-    ROADMAP.md). Gated behind ``S0_CFG["pair_aspect"]`` (None disables)."""
-    thresh = S0_CFG.get("pair_aspect")
-    if thresh is None:
-        return False
+    ROADMAP.md). The threshold is the constant ``PYTESS_PAIR_ASPECT``; the
+    C s0_segs path receives the same value."""
     uniq = np.unique(centroids, axis=0)
     if len(uniq) != 2:
         return False
@@ -1598,101 +1463,12 @@ def _pytess_pair_degenerate(centroids: np.ndarray) -> bool:
     hi = max(dx, dy)
     if hi == 0:
         return True
-    return (min(dx, dy) / hi) < thresh
-
-
-def _strictly_contains(ring: np.ndarray, x: float, y: float) -> bool:
-    """GEOS `.contains` semantics: interior containment — a point ON the
-    boundary is NOT contained (the reference's multipart anchor selection,
-    `_complexity.py:40-42`)."""
-    from .. import geom as _G
-
-    if not _G.point_in_ring(x, y, ring):
-        return False
-    # on-boundary → excluded
-    seg = np.hstack([ring[:-1], ring[1:]])
-    dx = seg[:, 2] - seg[:, 0]
-    dy = seg[:, 3] - seg[:, 1]
-    px = x - seg[:, 0]
-    py = y - seg[:, 1]
-    l2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = np.clip(np.where(l2 > 0, (px * dx + py * dy) / l2, 0.0), 0.0, 1.0)
-    d2 = (px - t * dx) ** 2 + (py - t * dy) ** 2
-    return bool(d2.min() > 1e-24)
-
-
-def s0_graph_fortune(block_ring: np.ndarray, centroids: np.ndarray, boundary_set=None) -> nx.Graph:
-    """The reference s0 with the pytess/Fortune backend
-    (`_complexity.py:16-45` + kernels/fortune.py): sweepline cells with
-    their implementation artifacts (unbounded -1 wraps, partial chains,
-    duplicate circumcenters), healed via buffer(0)-equivalent even-odd
-    region reconstruction, intersected with the block by the general
-    overlay, multipart parts selected by STRICT anchor containment, and
-    unioned with exact-identity node sharing (QUANTUM-snapped overlay
-    outputs make geometrically-equal vertices bit-equal, emulating GEOS
-    keeping pytess's shared circumcenters verbatim)."""
-    from .. import geom as _G
-    from . import fortune as FT
-    from . import overlay as OV
-
-    centroids = np.asarray(centroids, dtype=np.float64).reshape(-1, 2)
-    if boundary_set is None:
-        boundary_set = {(float(x), float(y)) for x, y in block_ring}
-    block = _G.Geom(_G.POLYGON, [np.asarray(block_ring, dtype=np.float64)])
-    rings = []
-    for anchor, vs in FT.cells_pytess([(float(x), float(y)) for x, y in centroids]):
-        if anchor is None or anchor in boundary_set or len(vs) <= 2:
-            continue
-        arr = np.asarray(vs, dtype=np.float64)
-        if len(np.unique(arr.round(15), axis=0)) < 3:
-            continue  # degenerate ring: Polygon(vs) would not construct
-        ring = np.vstack([arr, arr[:1]]) if tuple(arr[0]) != tuple(arr[-1]) else arr
-        try:
-            healed = OV.heal_ring(ring)
-            if healed is None:
-                continue
-            inter = OV.intersect_local(healed, block)
-        except Exception:
-            continue  # the reference's try/except TopologicalError skip
-        if inter is None:
-            continue
-        if inter.kind == _G.POLYGON:
-            rings.append(inter.data[0])  # exterior only (from_polygons)
-        elif inter.kind == _G.MULTIPOLYGON:
-            for part in inter.data:
-                if _strictly_contains(np.asarray(part[0]), anchor[0], anchor[1]):
-                    rings.append(part[0])
-                    break
-    return graph_from_rings_exact(rings)
-
-
-def graph_from_rings_exact(rings) -> nx.Graph:
-    """Exact-coordinate-identity union graph — the reference's
-    `PlanarGraph.from_polygons` node semantics (topology.py:193-204): no
-    clustering, no tolerance; nodes merge iff their float pairs are equal."""
-    g = nx.Graph()
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        for i in range(len(r) - 1):
-            a = (float(r[i, 0]), float(r[i, 1]))
-            b = (float(r[i + 1, 0]), float(r[i + 1, 1]))
-            if a != b:
-                g.add_edge(a, b)
-    return g
+    return (min(dx, dy) / hi) < PYTESS_PAIR_ASPECT
 
 
 def block_complexity(block_ring: np.ndarray, centroids: np.ndarray) -> int:
     """K3+K6-K10 composed: k-complexity of one block (`_complexity.py:57-97`)."""
-    if (
-        _CF is not None
-        and S0_CFG.get("backend") != "fortune"
-        and S0_CFG["dummies"] == "corner"
-        and S0_CFG["canon"]
-        and S0_CFG["snap"]
-        and S0_CFG.get("arrangement")
-        and not S0_CFG.get("selfloops", False)
-    ):
+    if _CF is not None:
         # fused per-block C path (round 8): the whole voronoi → canonicalize
         # → clip → snap → split → anchor-select sequence in ONE call, the
         # noding in numpy (_node_pieces), the graph build + weak-dual loop
@@ -1701,12 +1477,11 @@ def block_complexity(block_ring: np.ndarray, centroids: np.ndarray) -> int:
         # block values; the DJI golden replay is unchanged).
         br = np.asarray(block_ring, dtype=np.float64)
         cents = np.asarray(centroids, dtype=np.float64).reshape(-1, 2)
-        pa = S0_CFG.get("pair_aspect")
         try:
             seg_bytes = _CF.s0_segs(
                 br[:, 0].tolist(), br[:, 1].tolist(),
                 cents[:, 0].tolist(), cents[:, 1].tolist(),
-                -1.0 if pa is None else float(pa), SNAP, 1e-9,
+                PYTESS_PAIR_ASPECT, SNAP, 1e-9,
             )
         except ValueError:
             pass  # capacity guard tripped: take the Python path
@@ -1725,10 +1500,7 @@ def block_complexity(block_ring: np.ndarray, centroids: np.ndarray) -> int:
             if not pieces_b:
                 return 0
             return _CF.weak_dual_k_segs(pieces_b, 64)
-    if S0_CFG.get("backend") == "fortune":
-        g0 = s0_graph_fortune(block_ring, centroids)
-    else:
-        g0 = s0_graph(block_ring, centroids)
+    g0 = s0_graph(block_ring, centroids)
     if g0.number_of_nodes() == 0:
         return 0
     return weak_dual_sequence_len(g0)

@@ -91,8 +91,8 @@ def test_split_ring_parts():
 
 @pytest.mark.slow
 def test_golden_dji_fixture_replay():
-    """k-index vs the reference's golden complexity CSV: ≥66% exact and
-    ≥97% within ±1. (The fixture is not bit-reproducible even from the
+    """k-index vs the reference's golden complexity CSV: ≥155/196 exact and
+    ≥185/196 within ±1. (The fixture is not bit-reproducible even from the
     checked-in reference code — its k=0 rows are impossible under the
     code's own self-adjacency semantics — so the residual ±1 scatter is
     attributed to the Voronoi backend; see kernels/planar.py docstrings.)"""
@@ -407,13 +407,6 @@ def test_pair_aspect_rule_decision_boundary():
         np.array([[1.0, 1.0], [2.0, 1.1], [2.5, 2.5]])
     )
     assert not P._pytess_pair_degenerate(np.array([[1.0, 1.0], [1.0, 1.0]]))
-    # and the gate disables cleanly
-    old = P.S0_CFG["pair_aspect"]
-    try:
-        P.S0_CFG["pair_aspect"] = None
-        assert not P._pytess_pair_degenerate(np.array([[1.0, 1.0], [2.0, 1.1]]))
-    finally:
-        P.S0_CFG["pair_aspect"] = old
 
 
 def test_c_clip_matches_python_bitwise():

@@ -83,11 +83,10 @@ def _segs_ref(ring, pts):
 
 
 def _segs_c(ring, pts):
-    pa = P.S0_CFG.get("pair_aspect")
     b = CF.s0_segs(
         ring[:, 0].tolist(), ring[:, 1].tolist(),
         pts[:, 0].tolist(), pts[:, 1].tolist(),
-        -1.0 if pa is None else float(pa), P.SNAP, 1e-9,
+        P.PYTESS_PAIR_ASPECT, P.SNAP, 1e-9,
     )
     return np.frombuffer(b).reshape(-1, 4)
 
@@ -189,21 +188,6 @@ def test_seeded_world_outputs_pinned(monkeypatch, native):
     assert sum(ks) == PIN_K_SUM
     assert hashlib.sha256(np.asarray(ks, dtype="<i2").tobytes()).hexdigest() == PIN_K_SHA256
     assert h_rings.hexdigest() == PIN_RINGS_SHA256
-
-
-def test_block_complexity_fallback_on_nonstandard_config():
-    # ablation configs must keep taking the Python path (same answers)
-    pts = np.random.default_rng(12).uniform(0, 1, size=(12, 2))
-    old = dict(P.S0_CFG)
-    try:
-        P.S0_CFG["selfloops"] = True
-        k_self = P.block_complexity(SQUARE, pts)
-        P.S0_CFG.update(old)
-        assert isinstance(k_self, int)
-        assert P.block_complexity(SQUARE, pts) == _k_python(SQUARE, pts)
-    finally:
-        P.S0_CFG.clear()
-        P.S0_CFG.update(old)
 
 
 def test_region_faces_matches_python_polygonize():

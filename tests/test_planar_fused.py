@@ -16,7 +16,8 @@ block; these suites pin every seam:
 * block_complexity — end-to-end fast path == forced Python path, on convex
   AND concave blocks (concave exercises split_ring_parts multiparts and the
   anchor-containment selection), boundary anchors, duplicate centroids, and
-  the two-anchor aspect rule.
+  the two-anchor aspect rule;
+* seeded worlds — k and _s0_rings digests pinned on both paths.
 """
 
 import numpy as np

@@ -16,6 +16,7 @@ cover-exploded blocks) → `groupBy(block_id).applyInPandas(kernel)`. The
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,28 +27,32 @@ from ..kernels import planar as P
 from .sjoin import pip_join
 
 _OUT_SCHEMA = "block_id string, geometry binary, complexity int, centroids_multipoint binary"
+_COLS = ["block_id", "geometry", "complexity", "centroids_multipoint"]
+
+
+def _k_row(block_id: str, block: G.Geom, xs: np.ndarray, ys: np.ndarray) -> tuple | None:
+    """One block's output row in `_OUT_SCHEMA` order, or None when no
+    centroid lies in the block. A `block_complexity` failure raises."""
+    # kernel-side PIP refine of the cell-join candidates (closed semantics,
+    # vectorized over all candidate points at once)
+    mask = G.points_in_polygon_bulk(xs, ys, block)
+    if not mask.any():
+        return None
+    cents = np.column_stack([xs[mask], ys[mask]])
+    ring = block.data[0] if block.kind == G.POLYGON else block.data[0][0]
+    k = P.block_complexity(ring, cents)
+    return (block_id, G.wkb_dumps(block), int(k), G.wkb_dumps(G.multipoint(cents)))
 
 
 def _k_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    block_id = pdf["block_id"].iloc[0]
+    """The staged operator's per-block kernel: a failed block yields no row."""
     block = G.wkb_loads(bytes(pdf["block_geom"].iloc[0]))
-    ring = block.data[0] if block.kind == G.POLYGON else block.data[0][0]
-    cents = pdf[["x", "y"]].to_numpy(dtype=float)
-    # kernel-side PIP refine of the cell-join candidates (closed semantics,
-    # vectorized over all candidate points at once)
-    mask = G.points_in_polygon_bulk(cents[:, 0], cents[:, 1], block)
-    cents = cents[mask]
-    if not len(cents):
-        return pd.DataFrame(columns=["block_id", "geometry", "complexity", "centroids_multipoint"])
     try:
-        k = P.block_complexity(ring, cents)
+        row = _k_row(pdf["block_id"].iloc[0], block, pdf["x"].to_numpy(dtype=float),
+                     pdf["y"].to_numpy(dtype=float))
     except Exception:
-        return pd.DataFrame(columns=["block_id", "geometry", "complexity", "centroids_multipoint"])
-    mp = G.wkb_dumps(G.multipoint(cents))
-    return pd.DataFrame(
-        [(block_id, G.wkb_dumps(block), int(k), mp)],
-        columns=["block_id", "geometry", "complexity", "centroids_multipoint"],
-    )
+        row = None
+    return pd.DataFrame([row] if row else [], columns=_COLS)
 
 
 def building_centroids(buildings: DataFrame, id_col: str = "osm_id", res: int | None = None) -> DataFrame:

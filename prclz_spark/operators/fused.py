@@ -2,92 +2,34 @@
 ONE grouped pass per admin region.
 
 The staged operators (blocks.py → complexity.py) materialize blocks between
-stages — faithful to the reference's file-per-stage layout and right when
-stages are consumed independently. But the headline end-to-end job
-(BASELINE.json metric: "blocks+parcels processed/sec, end-to-end block
-extraction → k-index") consumes blocks exactly once, immediately — so the
-engine also offers this fused operator, which collapses the physical plan
-to:
+stages. The headline end-to-end job (BASELINE.json metric: "blocks+parcels
+processed/sec, end-to-end block extraction → k-index") consumes blocks
+exactly once, immediately, so this operator runs the resumable pipeline's
+region pass (`pipeline._region_pass`) with the stages blocks and complexity,
+nothing done and one group per region, and projects its stage-tagged table:
 
-    lines     ⋈cell broadcast(region covers)   ─┐  (narrow, no probe shuffle)
-    buildings ⋈cell broadcast(region covers)   ─┤
-    union → ONE shuffle on gadm → ONE applyInPandas kernel per region:
-        polygonize streets → bulk-PIP centroids per block → k per block
+    lines     (one row per cover cell)       ─┐
+    buildings (centroid cell, no footprint)  ─┤ ⋈cell broadcast(region covers)
+    ∪ one row per region
+    → ONE shuffle on gadm → ONE applyInPandas kernel per region
+      (pipeline._make_region_kernel): polygonize streets → bbox prefilter +
+      bulk PIP of the centroids per block → complexity._k_row per block
+    → ONE filter + select: the complexity rows, plus (keep_status=True) the
+      ledger error rows of the blocks and complexity stages
 
-Same outputs as the staged path (asserted in tests/test_fused.py); ~half
-the fixed per-job cost (no blocks broadcast job, one python stage instead
-of three). Region granularity is the reference's own sharding unit (one
-GADM file per job), so per-group memory is the same contract the original
-pipeline already assumes.
+Same outputs as the staged path (asserted in tests/test_fused.py). Region
+granularity is the reference's own sharding unit (one GADM file per job),
+so per-group memory is the same contract the original pipeline assumes.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import geom as G
-from ..functions.st import st_cells, st_centroid_xy_cell
-from ..kernels import planar as P
+from ..pipeline import _REGION_OF_BLOCK, _make_region_kernel, _region_pass
 
-_OUT_SCHEMA = (
-    "block_id string, gadm string, geometry binary, complexity int, "
-    "centroids_multipoint binary, status string"
-)
-_COLS = ["block_id", "gadm", "geometry", "complexity", "centroids_multipoint", "status"]
-
-
-def _fused_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    gadm = pdf["gadm"].iloc[0]
-    rows = []
-    try:
-        region = G.wkb_loads(bytes(pdf["region_geom"].iloc[0]))
-        region_rings = (
-            [region.data[0]] if region.kind == G.POLYGON else [p[0] for p in region.data]
-        )
-
-        line_arrays = []
-        for g in G.wkb_loads_batch(pdf.loc[pdf["kind"] == "L", "payload"].drop_duplicates()):
-            line_arrays.extend([g.data] if g.kind == G.LINESTRING else list(g.data))
-
-        pts = pdf.loc[pdf["kind"] == "B", ["x", "y"]].drop_duplicates().to_numpy(dtype=float)
-
-        i = 0
-        for ring in region_rings:
-            blocks = P.polygonize_region(ring, line_arrays) or [ring]
-            for blk in blocks:
-                block_id = f"{gadm}_{i}"
-                i += 1
-                blk_geom = G.Geom(G.POLYGON, [blk])
-                if len(pts):
-                    mask = G.points_in_polygon_bulk(pts[:, 0], pts[:, 1], blk_geom)
-                    cents = pts[mask]
-                else:
-                    cents = np.zeros((0, 2))
-                if not len(cents):
-                    continue  # complexity defined only for blocks w/ buildings
-                k = P.block_complexity(blk, cents)
-                rows.append(
-                    (
-                        block_id,
-                        gadm,
-                        G.wkb_dumps(blk_geom),
-                        int(k),
-                        G.wkb_dumps(G.multipoint(cents)),
-                        "ok",
-                    )
-                )
-    except Exception as ex:
-        # error isolation (same contract as blocks.py:_blocks_kernel): a
-        # corrupt region must NOT vanish from the output — it surfaces as a
-        # status='error' marker row the caller can exclude and ledger-record
-        return pd.DataFrame(
-            [(f"{gadm}__ERROR", gadm, None, None, None, f"error:{type(ex).__name__}")],
-            columns=_COLS,
-        )
-    return pd.DataFrame(rows, columns=_COLS)
+_STAGES = ("blocks", "complexity")
 
 
 def fused_blocks_k(
@@ -97,59 +39,27 @@ def fused_blocks_k(
     res: int,
     keep_status: bool = False,
 ) -> DataFrame:
-    """Fused blocks→PIP→k per region.
+    """Fused blocks→PIP→k per region: (block_id, gadm, geometry,
+    complexity, centroids_multipoint[, status]).
 
-    A region whose kernel raises yields a status='error' marker row (same
-    contract as ``extract_blocks``); by default those rows are filtered out,
-    ``keep_status=True`` returns them so callers can feed
+    A region whose blocks kernel fails, or a block whose k fails, yields a
+    marker row: block_id f"{key}__ERROR", the key's region as gadm and the
+    ledger status 'error:<ExcClass>'. By default those rows are filtered
+    out; ``keep_status=True`` returns them so callers can feed
     ``Ledger.record_errors`` and retry on resume."""
-    # The region-cover pUDF is CPU-heavy per ROW (~ms each), so its
-    # parallelism must not be inherited from however the caller partitioned
-    # a small dim table (a 1-partition 256-row gadm would serialize ~0.6 s
-    # of cover work into one task before the broadcast). Repartition to the
-    # session's shuffle parallelism — a few hundred rows of exchange,
-    # cluster-sized at any scale (round-8, guide §2).
-    n_par = int(gadm.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    b0 = gadm.select("gadm", F.col("geometry").alias("region_geom")).repartition(
-        n_par
-    ).withColumn("cells", st_cells(res)(F.col("region_geom")))
-    # a region whose geometry doesn't even parse (st_cells → NULL) would be
-    # silently dropped by the explode — surface it as an error row instead
-    # (same contract as extract_blocks' bad_regions)
-    bad_regions = b0.filter(F.col("cells").isNull()).select(
-        F.concat(F.col("gadm"), F.lit("__ERROR")).alias("block_id"),
-        F.col("gadm"),
-        F.lit(None).cast("binary").alias("geometry"),
-        F.lit(None).cast("int").alias("complexity"),
-        F.lit(None).cast("binary").alias("centroids_multipoint"),
-        F.lit("error:wkb").alias("status"),
-    )
-    b = b0.filter(F.col("cells").isNotNull()).withColumn(
-        "cell", F.explode(F.col("cells"))
-    ).drop("cells")
-    # one probe table, ONE broadcast hash join: unioning the two probe
-    # branches BEFORE the join builds/ships the region-cover broadcast once
-    # instead of twice (two identical broadcast exchanges are not reliably
-    # deduplicated across subtrees)
-    lines_p = (
-        lines.select(F.col("geometry").alias("payload"))
-        .withColumn("cell", F.explode(st_cells(res)(F.col("payload"))))
-        .select("cell", F.lit("L").alias("kind"), "payload",
-                F.lit(None).cast("double").alias("x"), F.lit(None).cast("double").alias("y"))
-    )
-    bldg_p = (
-        buildings.withColumn("_c", st_centroid_xy_cell(res)(F.col("geometry")))
-        .select(
-            F.col("_c.cell").alias("cell"), F.lit("B").alias("kind"),
-            F.lit(None).cast("binary").alias("payload"),
-            F.col("_c.x").alias("x"), F.col("_c.y").alias("y"),
-        )
-        .filter(F.col("cell").isNotNull())
-    )
-    grouped = lines_p.unionByName(bldg_p).join(F.broadcast(b), "cell", "inner")
-    full = grouped.groupBy("gadm").applyInPandas(_fused_kernel, _OUT_SCHEMA).unionByName(
-        bad_regions
-    )
+    kernel = _make_region_kernel(frozenset(), _STAGES, 1)
+    table = _region_pass(lines, gadm, buildings, res, kernel, 1, _STAGES)
+    tag, stage, key = F.col("tag"), F.col("stage"), F.col("partition_key")
+    error = (tag == "ledger") & (F.col("status") != "ok")
+    cols = [
+        F.coalesce(F.col("block_id"), F.concat(key, F.lit("__ERROR"))).alias("block_id"),
+        F.when(stage == "blocks", key)
+        .otherwise(F.regexp_extract(F.coalesce(F.col("block_id"), key), _REGION_OF_BLOCK, 1))
+        .alias("gadm"),
+        "geometry", "complexity", "centroids_multipoint",
+    ]
     if keep_status:
-        return full
-    return full.filter(F.col("status") == "ok").drop("status")
+        return table.filter((tag == "complexity") | error).select(
+            *cols, F.coalesce(F.col("status"), F.lit("ok")).alias("status")
+        )
+    return table.filter(tag == "complexity").select(*cols)

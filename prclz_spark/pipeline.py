@@ -7,13 +7,13 @@ it runs all stages for a region in one kernel call instead of one Spark job
 per stage. Plan shape:
 
     street lines  (one row per cover cell)      ─┐
-    buildings     (centroid cell + footprint)   ─┤ ⋈cell broadcast(region covers)
+    buildings     (centroid cell [+ footprint]) ─┤ ⋈cell broadcast(region covers)
     ∪ one row per region (its geometry, so a region no street or building
       reaches still forms a group)
     → ONE shuffle on gadm → applyInPandas per region, calling the staged
       operators' own per-group kernels in order:
         blocks._blocks_kernel → per-block bbox prefilter + points_in_polygon_bulk
-        → parcels._parcels_kernel_impl → complexity._k_kernel →
+        → parcels._parcels_kernel_impl → complexity._k_row →
         reblock_op._make_reblock_kernel
       (with fewer pending regions than 2 × cores, the group is (gadm, shard):
       each of a region's ceil(2 × cores / regions) shards re-derives its
@@ -33,10 +33,13 @@ ok with n_rows=0, so they count as done. This is the distributed form of
 the reference's skip-if-exists flags (`prclz/_complexity.py:100`,
 `prclz/_parcels.py:188`) and `.block.cache` files (`:79-97`).
 
-Error contract (same as the staged operators): a region whose blocks kernel
-fails gets a status='error' ledger row and no downstream rows; a block whose
-reblock kernel emits `road_type='error:*'` gets an error ledger row and no
-reblock rows. Error keys are retried on resume.
+`operators/fused.fused_blocks_k` runs this pass with the stages blocks and
+complexity alone.
+
+Error contract: a region whose blocks kernel fails gets a ledger row with
+status 'error:<ExcClass>' and no downstream rows; so does a block whose k
+kernel raises (no complexity row) or whose reblock kernel emits
+`road_type='error:*'` (no reblock rows). Error keys are retried on resume.
 """
 
 from __future__ import annotations
@@ -86,6 +89,8 @@ def _fields(ddl: str) -> list:
 _LEDGER_FIELDS = _fields(
     "stage string, partition_key string, status string, n_rows long, wall_ms double"
 )
+_LEDGER_COLS = [n for n, _ in _LEDGER_FIELDS]
+_STAGE_COLS = {s: [n for n, _ in _fields(ddl)] for s, ddl in _STAGE_SCHEMAS.items()}
 _FIELDS = [("tag", "string")] + _LEDGER_FIELDS
 for _ddl in _STAGE_SCHEMAS.values():
     _FIELDS += [f for f in _fields(_ddl) if f not in _FIELDS]
@@ -94,31 +99,39 @@ _COLS = [n for n, _ in _FIELDS]
 
 
 class _Emitter:
-    """Collects one region's output rows and ledger rows, skipping the
-    (stage, key) pairs the ledger already holds as done."""
+    """Collects one region's output rows, as tuples in each stage's schema
+    order, and its ledger rows, skipping the (stage, key) pairs the ledger
+    already holds as done."""
 
     def __init__(self, done: frozenset):
         self.done = done
-        self.frames: list = []
+        self.rows: dict = {s: [] for s in _STAGE_SCHEMAS}
         self.ledger: list = []
 
-    def add(self, stage: str, key: str, rows: pd.DataFrame | None, t0: float) -> None:
-        """Record `stage`'s result for `key`; rows=None marks a failed key.
-        wall_ms is the time since t0, taken when the stage started."""
+    def add(self, stage: str, key: str, t0: float, rows=(), status: str = "ok") -> None:
+        """Record `stage`'s rows for `key`, or its failure as an
+        'error:<ExcClass>' status. wall_ms is the time since t0, taken when
+        the stage started."""
         if (stage, key) in self.done:
             return
         ms = (time.perf_counter() - t0) * 1e3
-        n = 0 if rows is None else len(rows)
-        self.ledger.append((stage, key, "ok" if rows is not None else "error", n, ms))
-        if n:
-            self.frames.append(rows.assign(tag=stage))
+        self.rows[stage] += rows
+        self.ledger.append((stage, key, status, len(rows), ms))
 
     def frame(self) -> pd.DataFrame:
-        if not self.ledger:
-            return pd.DataFrame(columns=_COLS)
-        led = pd.DataFrame(self.ledger, columns=[n for n, _ in _LEDGER_FIELDS])
-        out = pd.concat(self.frames + [led.assign(tag="ledger")], ignore_index=True)
-        return out.reindex(columns=_COLS)
+        """All rows as one `_SCHEMA` frame, built column by column."""
+        cols: dict = {c: [] for c in _COLS}
+        groups = [(s, _STAGE_COLS[s], rows) for s, rows in self.rows.items()]
+        for tag, names, rows in groups + [("ledger", _LEDGER_COLS, self.ledger)]:
+            values = dict(zip(names, zip(*rows)))
+            cols["tag"] += [tag] * len(rows)
+            for c in _COLS[1:]:
+                cols[c] += values.get(c, [None] * len(rows))
+        return pd.DataFrame(cols)
+
+
+def _tuples(df: pd.DataFrame, stage: str) -> list:
+    return list(zip(*(df[c].tolist() for c in _STAGE_COLS[stage])))
 
 
 def _zero_street_block(gadm: str, region_geom: bytes) -> pd.DataFrame:
@@ -145,9 +158,10 @@ def _make_region_kernel(done: frozenset, stages: tuple, shards: int):
         gadm = pdf["gadm"].iloc[0]
         shard = int(pdf["shard"].iloc[0]) if shards > 1 else 0
         out = _Emitter(done)
-        kind = pdf["kind"]
-        region_geom = bytes(pdf.loc[kind == "R", "payload"].iloc[0])
-        lines = pdf.loc[kind == "L", "payload"].to_numpy()
+        kind = pdf["kind"].to_numpy()
+        payload = pdf["payload"].to_numpy()
+        region_geom = bytes(payload[kind == "R"][0])
+        lines = payload[kind == "L"]
 
         t0 = time.perf_counter()
         if len(lines):
@@ -157,79 +171,87 @@ def _make_region_kernel(done: frozenset, stages: tuple, shards: int):
             )
         else:
             blocks = _zero_street_block(gadm, region_geom)
-        if (blocks["status"] != "ok").any():
+        status = blocks["status"].to_numpy()
+        if (status != "ok").any():
             if shard == 0:
-                out.add("blocks", gadm, None, t0)
+                out.add("blocks", gadm, t0, status=status[0])
             return out.frame()
-        blocks = blocks.drop(columns="status")
         if shard == 0:
-            out.add("blocks", gadm, blocks, t0)
+            out.add("blocks", gadm, t0, _tuples(blocks, "blocks"))
 
-        bldg = pdf[kind == "B"]
-        xs, ys = bldg["x"].to_numpy(dtype=float), bldg["y"].to_numpy(dtype=float)
+        b = kind == "B"
+        xs, ys = pdf["x"].to_numpy(dtype=float)[b], pdf["y"].to_numpy(dtype=float)[b]
+        osm_id, footprint = pdf["osm_id"].to_numpy()[b], payload[b]
         by_x = np.argsort(xs, kind="stable")
         sorted_x = xs[by_x]
 
-        def buildings_in(poly: G.Geom) -> pd.DataFrame:
-            """The buildings whose centroid lies in `poly`, in arrival order.
-            A bounding-box prefilter (binary search on x, then y) runs before
-            the exact PIP, so the cost follows the block's candidates, not
-            the region's building count."""
+        def buildings_in(poly: G.Geom) -> np.ndarray:
+            """Indices of the buildings whose centroid lies in `poly`, in
+            arrival order. A bounding-box prefilter (binary search on x,
+            then y) runs before the exact PIP, so the cost follows the
+            block's candidates, not the region's building count."""
             x0, y0, x1, y1 = G.bounds(poly)
             lo, hi = np.searchsorted(sorted_x, x0, "left"), np.searchsorted(sorted_x, x1, "right")
             idx = np.sort(by_x[lo:hi])
             idx = idx[(ys[idx] >= y0) & (ys[idx] <= y1)]
-            return bldg.iloc[idx[G.points_in_polygon_bulk(xs[idx], ys[idx], poly)]]
+            return idx[G.points_in_polygon_bulk(xs[idx], ys[idx], poly)]
 
         for i, (bid, bgeom) in enumerate(zip(blocks["block_id"], blocks["geometry"])):
             want = {s for s in stages[1:] if (s, bid) not in done}
             if not want or i % shards != shard:
                 continue
             t0 = time.perf_counter()  # parcels' wall_ms includes the assignment
-            inside = buildings_in(G.wkb_loads(bgeom))
+            block = G.wkb_loads(bgeom)
+            inside = buildings_in(block)
             if want & {"parcels", "reblock"}:  # reblock runs on the parcels
                 if len(inside):
                     ppdf = pd.DataFrame({"block_id": bid, "block_geom": [bgeom] * len(inside),
-                                         "osm_id": inside["osm_id"].to_numpy(),
-                                         "bldg_geom": inside["payload"].to_numpy()})
+                                         "osm_id": osm_id[inside], "bldg_geom": footprint[inside]})
                 else:
                     ppdf = pd.DataFrame({"block_id": [bid], "block_geom": [bgeom],
                                          "osm_id": [None], "bldg_geom": [None]})
                 parcels = PC._parcels_kernel_impl(ppdf, 0.0)
-                out.add("parcels", bid, parcels, t0)
+                out.add("parcels", bid, t0, _tuples(parcels, "parcels"))
             if "complexity" in want:
                 t0 = time.perf_counter()
-                cplx = (
-                    CX._k_kernel(pd.DataFrame({"block_id": bid, "block_geom": [bgeom] * len(inside),
-                                               "x": inside["x"].to_numpy(),
-                                               "y": inside["y"].to_numpy()}))
-                    if len(inside) else pd.DataFrame()
-                )
-                out.add("complexity", bid, cplx, t0)
+                try:
+                    row = CX._k_row(bid, block, xs[inside], ys[inside])
+                except Exception as ex:
+                    out.add("complexity", bid, t0, status=f"error:{type(ex).__name__}")
+                else:
+                    out.add("complexity", bid, t0, [row] if row else [])
             if "reblock" in want:
                 t0 = time.perf_counter()
                 rb = rb_kernel(
                     (bid,),
                     parcels.rename(columns={"geometry": "parcel_geom"}).assign(block_geom=bgeom),
-                    pd.DataFrame({"block_id": bid, "osm_id": inside["osm_id"].to_numpy(),
-                                  "x": inside["x"].to_numpy(), "y": inside["y"].to_numpy()}),
+                    pd.DataFrame({"block_id": bid, "osm_id": osm_id[inside],
+                                  "x": xs[inside], "y": ys[inside]}),
                 )
-                failed = rb["road_type"].astype(str).str.startswith("error:").any()
-                out.add("reblock", bid, None if failed else rb, t0)
+                road = rb["road_type"].astype(str)
+                failed = road[road.str.startswith("error:")]
+                if len(failed):
+                    out.add("reblock", bid, t0, status=failed.iloc[0])
+                else:
+                    out.add("reblock", bid, t0, _tuples(rb, "reblock"))
         return out.frame()
 
     return kernel
 
 
 def _region_pass(
-    lines: DataFrame, gadm: DataFrame, buildings: DataFrame, res: int, kernel, shards: int
+    lines: DataFrame, gadm: DataFrame, buildings: DataFrame, res: int, kernel, shards: int,
+    stages: tuple = _STAGES,
 ) -> DataFrame:
     """The union of street lines, buildings and region rows, through ONE
     broadcast join against the region covers, grouped by region, or by
     (region, shard) when `shards` > 1: then every row goes to each of its
     region's shards, every shard re-derives the region's blocks (cheap
     next to the per-block stages) and runs the per-block stages of every
-    shards-th block, so a few large regions still fill the cores."""
+    shards-th block, so a few large regions still fill the cores.
+
+    A building row carries its footprint only when `stages` has parcels,
+    and its osm_id only when it has parcels or reblock."""
     regions = gadm.select("gadm", F.col("geometry").alias("payload"))
     covers = regions.select("gadm", F.explode(st_cells(res)(F.col("payload"))).alias("cell"))
     no_str, no_xy = F.lit(None).cast("string"), F.lit(None).cast("double")
@@ -238,11 +260,13 @@ def _region_pass(
         F.col("geometry").alias("payload"), no_str.alias("osm_id"),
         no_xy.alias("x"), no_xy.alias("y"),
     )
+    footprint = F.col("geometry") if "parcels" in stages else F.lit(None).cast("binary")
+    osm_id = F.col("osm_id") if {"parcels", "reblock"} & set(stages) else no_str
     bldg_p = (
         buildings.withColumn("_c", st_centroid_xy_cell(res)(F.col("geometry")))
         .select(
             F.col("_c.cell").alias("cell"), F.lit("B").alias("kind"),
-            F.col("geometry").alias("payload"), F.col("osm_id"),
+            footprint.alias("payload"), osm_id.alias("osm_id"),
             F.col("_c.x").alias("x"), F.col("_c.y").alias("y"),
         )
         .filter(F.col("cell").isNotNull())
@@ -320,10 +344,12 @@ def run_pipeline(
         # and at one group per core collisions leave cores idle
         shards = -(-2 * spark.sparkContext.defaultParallelism // n_units)
         kernel = _make_region_kernel(done, stages, shards)
-        table = _region_pass(lines, units, buildings, res, kernel, shards).localCheckpoint(eager=True)
+        table = _region_pass(
+            lines, units, buildings, res, kernel, shards, stages
+        ).localCheckpoint(eager=True)
         tag = F.col("tag")
         for s in todo:
-            rows = table.filter(tag == s).select(*[n for n, _ in _fields(_STAGE_SCHEMAS[s])])
+            rows = table.filter(tag == s).select(*_STAGE_COLS[s])
             w = rows.write.mode("append")
             (w.partitionBy("gadm") if s == "blocks" else w).parquet(os.path.join(out_dir, s))
             led.record(table.filter((tag == "ledger") & (F.col("stage") == s)))

@@ -6,6 +6,7 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -15,6 +16,7 @@ import pytest
 from prclz_spark import cells as C
 from prclz_spark import fixtures as FX
 from prclz_spark import geom as G
+from prclz_spark.kernels import planar as P
 from prclz_spark.operators.blocks import extract_blocks
 from prclz_spark.operators.complexity import k_complexity
 from prclz_spark.operators.ledger import Ledger
@@ -216,8 +218,55 @@ def test_failed_regions_are_ledger_errors_and_retried(spark, world, tmp_path):
     assert set(zip(err.stage, err.partition_key)) == {
         ("blocks", "POISON_KERNEL"), ("blocks", "POISON_WKB")
     }
+    assert err.status.str.startswith("error:").all(), err.status
     units, _, _, _ = _pending(Ledger(spark, os.path.join(out, "_ledger")), poisoned, STAGES[:3])
     assert sorted(r.gadm for r in units.collect()) == ["POISON_KERNEL", "POISON_WKB"]
+
+
+def _poly(ring) -> bytes:
+    return G.wkb_dumps(G.Geom(G.POLYGON, [np.array(ring, dtype=float)]))
+
+
+def test_failed_k_is_a_ledger_error(monkeypatch):
+    """A block whose k kernel raises gets an error ledger row carrying the
+    exception class (so a resume retries it) and no complexity row; the
+    region's other blocks and the other stages are unaffected."""
+    lines = [G.wkb_dumps(G.Geom(G.LINESTRING, np.array(c, dtype=float)))
+             for c in ([[2, -1], [2, 5]], [[-1, 2], [5, 2]])]
+    pts = [(x + dx, y + dy) for x in (0.5, 2.5) for y in (0.5, 2.5)
+           for dx, dy in ((0, 0), (0.8, 0.3), (0.3, 0.9))]
+    rows = (
+        [("R", _poly([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]]), None, None, None)]
+        + [("L", ln, None, None, None) for ln in lines]
+        + [("B", _poly([[x - .1, y - .1], [x + .1, y - .1], [x + .1, y + .1], [x - .1, y + .1],
+                        [x - .1, y - .1]]), f"b{i}", x, y) for i, (x, y) in enumerate(pts)]
+    )
+    pdf = pd.DataFrame(rows, columns=["kind", "payload", "osm_id", "x", "y"]).assign(gadm="R1")
+
+    real = P.block_complexity
+
+    def poisoned(ring, cents):
+        if ring[:, 0].min() >= 2 and ring[:, 1].min() >= 2:
+            raise ValueError("poisoned block")
+        return real(ring, cents)
+
+    monkeypatch.setattr(P, "block_complexity", poisoned)
+    out = _make_region_kernel(frozenset(), STAGES[:3], 1)(pdf)
+
+    blocks = out[out.tag == "blocks"]
+    assert len(blocks) == 4
+    bad = {bid for bid, g in zip(blocks.block_id, blocks.geometry)
+           if G.bounds(G.wkb_loads(g))[:2] >= (2, 2)}
+    assert len(bad) == 1
+    led = out[out.tag == "ledger"].set_index(["stage", "partition_key"])
+    for bid in blocks.block_id:
+        assert led.loc[("parcels", bid), "status"] == "ok"
+        k = led.loc[("complexity", bid)]
+        if bid in bad:
+            assert (k.status, k.n_rows) == ("error:ValueError", 0)
+        else:
+            assert (k.status, k.n_rows) == ("ok", 1)
+    assert set(out[out.tag == "complexity"].block_id) == set(blocks.block_id) - bad
 
 
 def test_fresh_run_job_count(spark, world, tmp_path):

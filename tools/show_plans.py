@@ -54,8 +54,10 @@ def main() -> None:
     sections.append(
         (
             "Fused pipeline (blocks → PIP → k-index)",
-            "two narrow probe branches union → ONE broadcast join → ONE shuffle "
-            "on gadm → one grouped kernel.",
+            "the pipeline's region pass with stages blocks and complexity: two "
+            "narrow probe branches union → ONE broadcast join, ∪ one row per "
+            "region → ONE shuffle on gadm → one grouped kernel → ONE filter + "
+            "select over the stage-tagged rows.",
             fmt(fused_blocks_k(lines, gadm, bldgs, res)),
         )
     )

@@ -677,11 +677,15 @@ def main(argv=None):
                     properties={"query_id": QID,
                                 "batch_id": int(args.batch_id)},
                 )
+                # counts from the committed manifests, not a table scan;
+                # the codes table takes appends only, so no delete applies
+                files = IL.files_at(codes_tbl, snap)
+                n_new = sum(e["rows"] for e in files if e["added_at"] == snap)
+                n = sum(e["rows"] for e in files)
                 if len(IL._manifests(codes_tbl, snap)) > 16:
                     IL.compact_manifests(codes_tbl)
-                n = IL.read(spark, codes_tbl).count()
                 print(f"batch {args.batch_id} encoded → {codes_tbl} "
-                      f"({n} total codes)", file=sys.stderr)
+                      f"({n_new} new, {n} total codes)", file=sys.stderr)
                 return
             if not (args.queries and args.out):
                 p.error("ann-index query: need --queries and --out")

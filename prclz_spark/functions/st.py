@@ -9,8 +9,7 @@ once per batch via the WKB codec.
 Reference semantics being reproduced (citations into /root/reference):
 centroid `prclz/_complexity.py:104`; area/shoelace `prclz/topology.py:144-168`;
 distance `prclz/_parcels.py:130`; intersects/contains `prclz/_parcels.py:41`,
-`prclz/reblock/_reblock.py:66`; explode `prclz/_parcels.py:86`; WKT io
-`prclz/utils.py:56`; Mercator 4326↔3395 `prclz/_parcels.py:34-35,48`.
+`prclz/reblock/_reblock.py:66`; WKT io `prclz/utils.py:56`.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from pyspark.sql.types import (
     BinaryType,
     BooleanType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
 )
@@ -64,13 +62,6 @@ def st_geomfromwkt(s: pd.Series) -> pd.Series:
 def st_aswkt(s: pd.Series) -> pd.Series:
     return pd.Series(
         [g if g is None else G.wkt_dumps(g) for g in G.wkb_loads_batch(s)]
-    )
-
-
-@pandas_udf(BinaryType())
-def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series(
-        G.wkb_dumps_points_batch(np.column_stack([x.to_numpy(float), y.to_numpy(float)]))
     )
 
 
@@ -489,14 +480,6 @@ def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(_pair_predicate_batch(a, b, "distance"))
 
 
-@pandas_udf(ArrayType(BinaryType()))
-def st_dump(s: pd.Series) -> pd.Series:
-    """Multipart → array of single parts; pair with F.explode (F5)."""
-    return s.map(
-        lambda b: [G.wkb_dumps(p) for p in G.explode(G.wkb_loads(bytes(b)))] if b is not None else None
-    )
-
-
 @pandas_udf(BinaryType())
 def st_boundary(s: pd.Series) -> pd.Series:
     """Polygon → MultiLineString of its rings (`prclz/reblock/_reblock.py:63`).
@@ -517,17 +500,6 @@ def st_boundary(s: pd.Series) -> pd.Series:
 
 
 @pandas_udf(BinaryType())
-def st_envelope(s: pd.Series) -> pd.Series:
-    bb = G.batch_bounds(_decode_batch(s))
-    return pd.Series(
-        [
-            G.wkb_dumps(G.box(r[0], r[1], r[2], r[3])) if not np.isnan(r[0]) else None
-            for r in bb
-        ]
-    )
-
-
-@pandas_udf(BinaryType())
 def st_convexhull(s: pd.Series) -> pd.Series:
     def f(b):
         if b is None:
@@ -541,40 +513,6 @@ def st_convexhull(s: pd.Series) -> pd.Series:
         return G.wkb_dumps(G.Geom(G.POLYGON, [ring]))
 
     return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_transform_merc(s: pd.Series) -> pd.Series:
-    """EPSG:4326 → EPSG:3395 (world Mercator), pure numpy."""
-    def f(b):
-        if b is None:
-            return None
-        g = G.wkb_loads(bytes(b))
-        return G.wkb_dumps(_map_coords(g, G.mercator_fwd))
-
-    return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_transform_merc_inv(s: pd.Series) -> pd.Series:
-    def f(b):
-        if b is None:
-            return None
-        g = G.wkb_loads(bytes(b))
-        return G.wkb_dumps(_map_coords(g, G.mercator_inv))
-
-    return s.map(f)
-
-
-def _map_coords(g: G.Geom, fn) -> G.Geom:
-    k = g.kind
-    if k in (G.POINT,):
-        return G.Geom(k, fn(g.data.reshape(1, 2))[0])
-    if k in (G.LINESTRING, G.MULTIPOINT):
-        return G.Geom(k, fn(g.data))
-    if k in (G.POLYGON, G.MULTILINESTRING):
-        return G.Geom(k, [fn(r) for r in g.data])
-    return G.Geom(k, [[fn(r) for r in rings] for rings in g.data])
 
 
 @pandas_udf(BinaryType())
@@ -772,30 +710,6 @@ def st_offset_curve(dist: float):
     return _f
 
 
-@pandas_udf(BinaryType())
-def st_minimum_rotated_rectangle(s: pd.Series) -> pd.Series:
-    def f(b):
-        if b is None:
-            return None
-        import numpy as _np
-
-        pts = _np.vstack(G._all_coords(G.wkb_loads(bytes(b))))
-        return G.wkb_dumps(G.Geom(G.POLYGON, [G.minimum_rotated_rectangle(pts)]))
-
-    return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_representative_point(s: pd.Series) -> pd.Series:
-    def f(b):
-        if b is None:
-            return None
-        p = G.representative_point(G.wkb_loads(bytes(b)))
-        return G.wkb_dumps(G.point(float(p[0]), float(p[1])))
-
-    return s.map(f)
-
-
 # --- cell index functions (axis-A core, SURVEY.md §7 step 2) ---------------
 
 
@@ -895,7 +809,8 @@ def st_centroid_xy_cell(res: int):
         cells = C.cell_of_xy(np.nan_to_num(xs), np.nan_to_num(ys), res)
         return pd.DataFrame({"x": xs, "y": ys, "cell": np.where(np.isnan(xs), None, cells)})
 
-    return _f
+    # deterministic; flagged only so a pushed-down `cell IS NOT NULL` cannot evaluate it twice
+    return _f.asNondeterministic()
 
 
 def st_cell_point(res: int):

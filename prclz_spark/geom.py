@@ -30,7 +30,6 @@ parsed but rarely produced).
 
 from __future__ import annotations
 
-import math
 import struct
 from dataclasses import dataclass
 
@@ -1372,13 +1371,3 @@ def mercator_inv(xy: np.ndarray) -> np.ndarray:
         es = _E * np.sin(lat)
         lat = np.pi / 2 - 2 * np.arctan(t * ((1 - es) / (1 + es)) ** (_E / 2))
     return np.stack([np.degrees(lon), np.degrees(lat)], axis=-1)
-
-
-def haversine_m(lon0, lat0, lon1, lat1):
-    """Geodesic distance in meters (`prclz/reblock/_reblock_graph.py:76-82`)."""
-    r = 6371008.8
-    p0, p1 = math.radians(lat0), math.radians(lat1)
-    dp = p1 - p0
-    dl = math.radians(lon1 - lon0)
-    a = math.sin(dp / 2) ** 2 + math.cos(p0) * math.cos(p1) * math.sin(dl / 2) ** 2
-    return 2 * r * math.asin(math.sqrt(a))

@@ -62,13 +62,6 @@ def png_encode(px: np.ndarray) -> bytes:
     )
 
 
-def _paeth(a, b, c):
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 def png_decode(data: bytes) -> np.ndarray:
     """PNG bytes → HxWx3 uint8 (RGB8 non-interlaced; filters 0-4)."""
     assert data[:8] == _PNG_SIG, "not a PNG"

@@ -367,14 +367,32 @@ def test_auto_lists_balances_candidates(spark):
     assert n_probe * sizes["count"].max() < n / 4
 
 
-def test_cli_ann_index_encode_batch_loop(spark, tmp_path):
+def test_cli_ann_index_encode_batch_loop(spark, tmp_path, monkeypatch, capsys):
     """Daily similarity-index loop (r7): `build` freezes the quantizers on
     the day-0 corpus; `encode-batch` appends new vectors' codes
     exactly-once to an iceberg-lite codes table (seeded from the build
     snapshot); `query` reads the grown table and finds day-1 vectors (a
-    planted scale-twin at rank 1); a replayed --batch-id is a no-op."""
+    planted scale-twin at rank 1); a replayed --batch-id is a no-op.
+    Each encode-batch reads the codes table once (the re-crawl semi-join)
+    and prints batch and table counts taken from the manifests."""
+    import re
+
     from prclz_spark import cli
     from prclz_spark.sources import iceberg_lite as IL
+
+    reads = []
+    real_read = IL.read
+    monkeypatch.setattr(IL, "read", lambda *a, **kw: reads.append(a) or real_read(*a, **kw))
+
+    def encode_batch(batch_id):
+        """One encode-batch → (its IL.read calls, its printed (new, total))."""
+        reads.clear()
+        capsys.readouterr()
+        cli.main(["ann-index", "encode-batch", "--corpus", corpus_dir,
+                  "--index", idx, "--dim", "64",
+                  "--batch", day1_p, "--batch-id", batch_id])
+        m = re.search(r"\((\d+) new, (\d+) total codes\)", capsys.readouterr().err)
+        return len(reads), m and (int(m[1]), int(m[2]))
 
     idx = str(tmp_path / "idx")
     codes_tbl = idx + "/codes_tbl"
@@ -390,26 +408,24 @@ def test_cli_ann_index_encode_batch_loop(spark, tmp_path):
     day1 = e.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 450))
     day1_p = str(tmp_path / "day1.pq")
     day1.write.parquet(day1_p)
-    cli.main(["ann-index", "encode-batch", "--corpus", corpus_dir,
-              "--index", idx, "--dim", "64",
-              "--batch", day1_p, "--batch-id", "0"])
+    n_reads, printed = encode_batch("0")
     n_total = IL.read(spark, codes_tbl).count()
     assert n_total > n_day0  # day-1 codes landed (zero-norm rows may drop)
+    assert n_reads == 1
+    assert printed == (n_total - n_day0, n_total)
 
     # replay of a committed batch-id must not move the snapshot
     snap = IL.current_snapshot(codes_tbl)
-    cli.main(["ann-index", "encode-batch", "--corpus", corpus_dir,
-              "--index", idx, "--dim", "64",
-              "--batch", day1_p, "--batch-id", "0"])
+    assert encode_batch("0") == (0, None)
     assert IL.current_snapshot(codes_tbl) == snap
 
     # a later batch RE-CRAWLING already-encoded ids must not duplicate
     # their codes (duplicate codes = duplicate query candidates)
-    cli.main(["ann-index", "encode-batch", "--corpus", corpus_dir,
-              "--index", idx, "--dim", "64",
-              "--batch", day1_p, "--batch-id", "1"])
+    n_reads, printed = encode_batch("1")
     codes = IL.read(spark, codes_tbl)
     assert codes.count() == codes.dropDuplicates(["vec_id"]).count() == n_total
+    assert n_reads == 1
+    assert printed == (0, n_total)
 
     # the re-rank corpus must cover day 1 too
     day1.write.mode("append").parquet(corpus_dir)

@@ -99,3 +99,5 @@ def test_fused_plan_and_job_count(spark, keep_status):
     plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert plan.count("BroadcastExchange") == 1, plan
+    # line covers, building centroids (once) and region covers
+    assert plan.count("ArrowEvalPython") == 3, plan

@@ -21,6 +21,9 @@ def test_pip_join_is_broadcast_no_probe_shuffle(spark):
     # with a broadcast join the only Exchange in the plan is the broadcast
     assert "ShuffleExchange" not in plan.replace("BroadcastExchange", "")
     assert "Exchange hashpartitioning" not in plan
+    # the centroid UDF runs once per building, not again under the pushed
+    # `cell IS NOT NULL`; with the region covers and the PIP refine
+    assert plan.count("ArrowEvalPython") == 3, plan
 
 
 def test_parquet_filter_pushdown(spark):

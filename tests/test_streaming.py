@@ -1,136 +1,9 @@
-"""Streaming/batch equivalence on the events table."""
+"""Streaming/batch equivalence of the dedup, text-quality and curate stream paths."""
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from prclz_spark.streaming.events import (
-    hourly_rollup,
-    read_events_stream,
-    run_available_now,
-    user_sessions,
-)
-
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _events_dir(tmp_path):
-    """The file source needs a DIRECTORY; stage the single parquet file."""
-    import os
-
-    d = tmp_path / "events_stream"
-    d.mkdir()
-    os.symlink(f"{SF_DIR}/events.parquet", d / "part-0.parquet")
-    return str(d)
-
-
-def test_hourly_rollup_matches_batch(spark, tmp_path):
-    stream = read_events_stream(spark, _events_dir(tmp_path))
-    got = run_available_now(hourly_rollup(stream), "hourly_test").toPandas()
-    batch = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
-        .groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
-        )
-        .toPandas()
-    )
-    key = ["hour", "event_type"]
-    g = got.sort_values(key).reset_index(drop=True)
-    b = batch.sort_values(key).reset_index(drop=True)
-    assert len(g) == len(b) > 0
-    assert (g[key].values == b[key].values).all()
-    assert (g.n.values == b.n.values).all()
-    assert abs(g.value_sum - b.value_sum).max() < 1e-9
-
-
-def test_user_sessions_stream_runs(spark, tmp_path):
-    stream = read_events_stream(spark, _events_dir(tmp_path))
-    out = run_available_now(user_sessions(stream), "sessions_test").toPandas()
-    assert len(out) > 0
-    assert (out.n_events >= 1).all()
-    assert (out.session_end > out.session_start).all()
-
-
-def test_stream_pip_assign_matches_batch(spark, tmp_path):
-    """Streaming PIP assignment ≡ batch pip_join on the same points:
-    the broadcast-build spatial join is stateless, so the identical plan
-    runs under Structured Streaming (streaming/geo.py)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from prclz_spark import geom as G
-    from prclz_spark.operators.sjoin import pip_join
-    from prclz_spark.streaming.geo import (
-        read_points_stream,
-        region_rates,
-        stream_pip_assign,
-    )
-
-    rng = np.random.default_rng(7)
-    n = 2000
-    pts = pd.DataFrame(
-        {
-            "event_id": np.arange(n),
-            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.integers(0, 86400, n), unit="s"),
-            "x": rng.uniform(10.0, 10.06, n),
-            "y": rng.uniform(10.0, 10.06, n),
-        }
-    )
-    # write via Spark: pandas emits INT64-nanos timestamps the streaming
-    # parquet reader refuses
-    batch_pts = spark.createDataFrame(pts)
-    d = tmp_path / "pts_stream"
-    batch_pts.coalesce(1).write.parquet(str(d))
-
-    boxes = [
-        (0, 10.0, 10.0, 10.03, 10.03),
-        (1, 10.03, 10.0, 10.06, 10.03),
-        (2, 10.0, 10.03, 10.03, 10.06),
-        (3, 10.03, 10.03, 10.06, 10.06),
-    ]
-    polys = spark.createDataFrame(
-        [(g, G.wkb_dumps(G.box(x0, y0, x1, y1))) for g, x0, y0, x1, y1 in boxes],
-        "gid long, geometry binary",
-    )
-
-    stream = read_points_stream(spark, str(d))
-    assigned = stream_pip_assign(stream, polys, "event_id", "gid", res=14)
-    q = (
-        assigned.writeStream.format("memory")
-        .queryName("pip_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("pip_stream_test").select("event_id", "gid").toPandas()
-
-    want = pip_join(batch_pts, polys, "event_id", "gid", res=14, how="inner").select(
-        "event_id", "gid"
-    ).toPandas()
-    ga = set(map(tuple, got.values))
-    wa = set(map(tuple, want.values))
-    assert ga == wa and len(got) >= n  # boundary points may match 2 boxes
-
-    # windowed per-region rates run on top of the same stream
-    rates = region_rates(stream_pip_assign(stream, polys, "event_id", "gid", res=14), "gid")
-    q2 = (
-        rates.writeStream.format("memory")
-        .queryName("pip_rates_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    rdf = spark.table("pip_rates_test").toPandas()
-    assert rdf.n.sum() == len(got)
-    assert set(rdf.gid) == {0, 1, 2, 3}
 
 
 def _docs_two_files(spark, tmp_path):
@@ -231,186 +104,6 @@ def test_dedup_minhash_stream_suppresses_recrawl(spark, tmp_path):
     got_stream = set(got.doc_id)
     assert got_stream <= set(range(60))
     assert isolated <= got_stream
-
-
-def test_stream_k_complexity_matches_batch(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): incremental
-    k-complexity over a building-event stream. The stream arrives in TWO
-    file-triggers (maxFilesPerTrigger=1), so every block is recomputed at
-    least once from restored state; the LAST emitted row per block must
-    equal the batch k_complexity on the union of all events."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from prclz_spark import cells as C
-    from prclz_spark import fixtures as FX
-    from prclz_spark import geom as G
-    from prclz_spark.operators.blocks import extract_blocks
-    from prclz_spark.operators.complexity import k_complexity
-    from prclz_spark.streaming.complexity import stream_k_complexity
-
-    lines, gadm, bldgs = FX.geo_world(spark, 4, 4)
-    res = C.choose_resolution(*FX.grid_params(4, 4), n_features=64)
-    blocks = extract_blocks(lines, gadm, res).cache()
-
-    # batch reference on ALL buildings
-    batch = {
-        r.block_id: (r.complexity, r.centroids_multipoint)
-        for r in k_complexity(blocks, bldgs, res).collect()
-    }
-
-    # the stream input = the same PIP assignment the batch path uses,
-    # materialized as (block_id, block_geom, x, y) and split in two files
-    from prclz_spark.operators.complexity import building_centroids
-    from prclz_spark.operators.sjoin import pip_join
-
-    pts = building_centroids(bldgs, res=res)
-    assigned = pip_join(
-        pts, blocks, "osm_id", "block_id", res=res, how="inner",
-        keep_poly_geom="block_geom", refine=False,
-    ).select("block_id", "block_geom", "x", "y").toPandas()
-    d = str(tmp_path / "bldg_stream")
-    os.makedirs(d)
-    half = len(assigned) // 2
-    spark.createDataFrame(assigned.iloc[:half]).write.parquet(f"{d}/b0.parquet")
-    spark.createDataFrame(assigned.iloc[half:]).write.parquet(f"{d}/b1.parquet")
-
-    stream = (
-        spark.readStream.schema("block_id string, block_geom binary, x double, y double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*.parquet")
-    )
-    q = (
-        stream_k_complexity(stream)
-        .writeStream.format("memory")
-        .queryName("stream_k")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("stream_k").toPandas()
-    assert len(got) > 0
-    # update-mode memory sink appends every emitted update; keep the last
-    # emission per block (n_bldgs is monotone, so max(n) is the final state)
-    final = got.sort_values(["block_id", "n_bldgs"]).groupby("block_id").tail(1)
-    assert set(final.block_id) == set(batch)
-    for r in final.itertuples():
-        want_k, want_mp = batch[r.block_id]
-        n_want = len(np.asarray(G.wkb_loads(bytes(want_mp)).data).reshape(-1, 2))
-        assert r.n_bldgs == n_want, (r.block_id, r.n_bldgs, n_want)
-        assert r.complexity == int(want_k), (r.block_id, r.complexity, want_k)
-
-
-def test_stream_k_complexity_timeout_path_runs(spark, tmp_path):
-    """The processing-time eviction variant drains cleanly and emits the
-    same final rows (timeouts cannot FIRE under availableNow's short run —
-    this pins the setTimeoutDuration call path, not eviction timing)."""
-    import os
-
-    import numpy as np
-    import pandas as pd
-
-    from prclz_spark import geom as G
-    from prclz_spark.streaming.complexity import stream_k_complexity
-
-    ring = G.wkb_dumps(G.box(0.0, 0.0, 1.0, 1.0))
-    rows = [
-        ("B1", bytearray(ring), 0.3 + 0.1 * i, 0.25 + 0.12 * ((i * 7) % 5))
-        for i in range(6)
-    ]
-    d = str(tmp_path / "ev")
-    os.makedirs(d)
-    spark.createDataFrame(
-        rows, "block_id string, block_geom binary, x double, y double"
-    ).write.parquet(f"{d}/b0.parquet")
-    stream = (
-        spark.readStream.schema("block_id string, block_geom binary, x double, y double")
-        .parquet(f"{d}/*.parquet")
-    )
-    q = (
-        stream_k_complexity(stream, idle_timeout_ms=1_000)
-        .writeStream.format("memory")
-        .queryName("stream_k_to")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # availableNow runs a final "cleaning up state" trigger that stays
-    # active until processing-time timeouts fire; give the 1s timeout a
-    # chance to evict, then stop — the data rows are already in the sink
-    q.awaitTermination(60)
-    if q.isActive:
-        q.stop()
-    got = spark.table("stream_k_to").toPandas()
-    assert len(got) == 1 and got.block_id.iloc[0] == "B1" and got.n_bldgs.iloc[0] == 6
-
-
-def test_stream_k_eviction_tombstone_never_understates(spark):
-    """Round-4 VERDICT #2 regression: after an idle-timeout eviction, a new
-    arrival must not silently overwrite the correct historical k with one
-    computed from the post-eviction fragment. The state handler is driven
-    directly with a stub GroupState (deterministic — real processing-time
-    eviction timing is covered by the integration test above): arrival of 9
-    buildings (k=3) → eviction (tombstone kept) → 1 new building (fragment
-    k=0) must emit complexity ≥ 3 and restarted=true."""
-    import numpy as np
-    import pandas as pd
-
-    from prclz_spark import geom as G
-    from prclz_spark.streaming.complexity import _k_state_func
-
-    class StubState:
-        def __init__(self):
-            self._v, self.hasTimedOut = None, False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    ring = G.wkb_dumps(G.box(0.0, 0.0, 1.0, 1.0))
-    pts9 = [(.15, .15), (.5, .12), (.85, .15), (.88, .5), (.85, .85),
-            (.5, .88), (.15, .85), (.12, .5), (.5, .5)]
-
-    def batch(rows):
-        return iter([pd.DataFrame(
-            [{"block_geom": ring, "x": x, "y": y} for x, y in rows]
-        )])
-
-    st = StubState()
-    (row1,) = list(_k_state_func(("B1",), batch(pts9), st))
-    assert (int(row1.n_bldgs.iloc[0]), int(row1.complexity.iloc[0])) == (9, 3)
-    assert not bool(row1.restarted.iloc[0])
-
-    # idle timeout fires: centroids dropped, 16-byte tombstone retained
-    st.hasTimedOut = True
-    assert list(_k_state_func(("B1",), iter([]), st)) == []
-    st.hasTimedOut = False
-    assert st.exists
-    _, pts_b, _, k_hist, n_hist = st._v
-    assert pts_b == b"" and (k_hist, n_hist) == (3, 9)
-
-    # post-eviction arrival: fragment alone would score k=0 — the emitted
-    # row must carry the historical floor and the restart marker
-    (row2,) = list(_k_state_func(("B1",), batch([(.4, .6)]), st))
-    assert int(row2.n_bldgs.iloc[0]) == 10
-    assert int(row2.complexity.iloc[0]) >= 3
-    assert bool(row2.restarted.iloc[0])
 
 
 def test_dedup_stream_against_corpus(spark, tmp_path):

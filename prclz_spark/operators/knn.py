@@ -1,4 +1,4 @@
-"""kNN via cell-ring expansion (SURVEY.md J8-J10).
+"""kNN and within-distance joins over the cell grid (SURVEY.md J8-J10).
 
 Replaces every nearest-neighbor mechanism in the reference:
 
@@ -9,57 +9,74 @@ Replaces every nearest-neighbor mechanism in the reference:
 * the sort-by-distance-then-scan parent-parcel search
   (`prclz/_parcels.py:105-149`).
 
-Algorithm (distributed, driver-coordinated ring loop):
+Both joins are equi-joins on the key ``ix · 2^res + iy`` of the grid
+indices from st.cell_ixy_cols, computed in the JVM on both sides (pip_join
+keeps the Morton cell id, because its build cells come from the Python
+st_cells cover). One mechanism, `_disk`, explodes a row into the cells of
+its Chebyshev disk(r): ``sequence`` over the clipped index range in each
+axis, so r may be a per-row column.
 
-    r = 0: join probes to build points sharing the probe's cell.
-    r += 1: for probes that do not yet have a PROVEN top-k, explode the
-    Chebyshev ring-r cells and join again; accumulate candidates.
-    A probe is proven once it has ≥ k candidates whose k-th distance is
-    ≤ r·min(cell_w, cell_h) — no point outside ring r can beat that.
-    Finish: Window.partitionBy(probe).orderBy(dist) → row_number ≤ k.
+kNN is ONE lazy plan; calling knn_join runs no Spark job:
 
-Round-8 plan shape (guide §§2.4, 4.1): the whole candidate path is pure
-JVM codegen — the probe/build cell ids are Column expressions
-(st.cell_ixy_cols / cell_from_ixy_cols, bit-equal to the former pandas
-UDFs) and the ring-cell expansion explodes a LITERAL (dx, dy) offset
-array (the offsets do not depend on the row), so no ArrowEvalPython node
-exists anywhere. The per-iteration satisfaction check is folded into the
-SAME window pass that produces the final top-k (count/max over the
-already-partitioned top-k rows), so one action materializes a ≤k-rows-
-per-probe checkpoint that doubles as the result — the former shape paid a
-full-candidate-set checkpoint plus a second full window for the proof.
+1. First pass: every probe explodes disk(1), its 3×3 cells, and left-joins
+   the broadcast build; row_number over (dist, bid) ≤ k; per probe
+   ``_nc`` = count and ``kd0`` = max(dist) of the kept rows.
+2. Ring size: the first r with ``kd0 <= r·w`` (w = min(cell_w, cell_h)),
+   computed as ceil(kd0 / w) plus 1 when that float test fails, capped at
+   ``max_ring``. A probe with fewer than k candidates in its 3×3 disk, or
+   none, gets ``max_ring``.
+3. Final pass: every probe explodes disk(r), joins the build and keeps
+   row_number over (dist, bid) ≤ k.
 
-Candidate (probe, build) pairs are UNIQUE by construction — each build
-point lives in exactly one cell, a probe's disk cells are distinct, and
-successive batches explode disjoint ring ranges — so no dedup exchange is
-needed (callers must pass unique build ids; duplicate build ids fed the
-old dedup an arbitrary-winner nondeterminism anyway).
+Exactness: a build point outside disk(r) lies ≥ r+1 cells from the probe's
+cell along some axis, and the probe may sit anywhere in its own cell, so
+the point is farther than r·w ≥ kd0 from the probe. Disk(1) already holds
+k points within kd0, so every point of the true top-k, ties included, is
+within kd0 and therefore in disk(r): the top-k of disk(r) is the exact
+top-k. A capped probe gets the top-k of disk(max_ring), which is exact
+whenever its true top-k lie within max_ring rings.
+
+Candidate (probe, build) pairs are unique by construction (each build
+point lives in exactly one cell and a probe's disk cells are distinct), so
+no dedup exchange is needed; callers pass unique probe and build ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import cells as C
-from ..functions.st import cell_ixy_cols, with_cell_from_ixy, with_cell_point
+from ..functions.st import cell_ixy_cols
 
 
-def _offsets_lit(r_lo: int, r_hi: int):
-    """Literal array of (dx, dy) Chebyshev offsets with r_lo ≤ max(|dx|,|dy|)
-    ≤ r_hi — the ring/disk cell set as data, exploded in the JVM."""
-    offs = [
-        (dx, dy)
-        for dx in range(-r_hi, r_hi + 1)
-        for dy in range(-r_hi, r_hi + 1)
-        if max(abs(dx), abs(dy)) >= r_lo
-    ]
-    return F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in offs
-        ]
+def _disk(df: DataFrame, r: Column, n: int) -> DataFrame:
+    """One row per cell of the Chebyshev disk(r) around (_ix, _iy), clipped
+    to the n×n grid; ``cell`` = ix·n + iy."""
+
+    def axis(c: str) -> Column:
+        lo = F.greatest(F.col(c) - r, F.lit(0))
+        return F.explode(F.sequence(lo, F.least(F.col(c) + r, F.lit(n - 1))))
+
+    return (
+        df.withColumn("_cx", axis("_ix"))
+        .withColumn("_cy", axis("_iy"))
+        .withColumn("cell", F.col("_cx") * n + F.col("_cy"))
+        .drop("_cx", "_cy")
     )
+
+
+def _points(df: DataFrame, pid: str, x: str, y: str, side: str, res: int) -> DataFrame:
+    """(_{side}id, _{side}x, _{side}y, _ix, _iy) of a point table at resolution res."""
+    ix, iy = cell_ixy_cols(res, F.col(x), F.col(y))
+    return df.select(
+        F.col(pid).alias(f"_{side}id"), F.col(x).alias(f"_{side}x"), F.col(y).alias(f"_{side}y"),
+        ix.alias("_ix"), iy.alias("_iy"),
+    )
+
+
+def _dist() -> Column:
+    return F.sqrt((F.col("_px") - F.col("_bx")) ** 2 + (F.col("_py") - F.col("_by")) ** 2)
 
 
 def within_distance_join(
@@ -94,40 +111,17 @@ def within_distance_join(
     res_eff = int(np.clip(min(res, max_res_for_radius), 0, C.MAX_RES))
     n = 1 << res_eff
 
-    p = with_cell_point(
-        probes.select(
-            F.col(probe_id).alias("_pid"),
-            F.col(probe_x).alias("_px"),
-            F.col(probe_y).alias("_py"),
-        ),
-        res_eff, "_px", "_py", "cell",
-    )
-    b = build.select(
-        F.col(build_id).alias("_bid"), F.col(build_x).alias("_bx"), F.col(build_y).alias("_by")
-    )
-    bix, biy = cell_ixy_cols(res_eff, F.col("_bx"), F.col("_by"))
-    b = (
-        b.withColumn("_bix", bix)
-        .withColumn("_biy", biy)
-        .withColumn("_o", F.explode(_offsets_lit(0, 1)))
-        .withColumn("_cix", F.col("_bix") + F.col("_o.dx"))
-        .withColumn("_ciy", F.col("_biy") + F.col("_o.dy"))
-        .filter(
-            (F.col("_cix") >= 0) & (F.col("_cix") < n)
-            & (F.col("_ciy") >= 0) & (F.col("_ciy") < n)
-        )
-    )
-    b = with_cell_from_ixy(b, res_eff, "_cix", "_ciy", "cell").select(
-        "_bid", "_bx", "_by", "cell"
-    )
+    p = _points(probes, probe_id, probe_x, probe_y, "p", res_eff)
+    p = p.select("_pid", "_px", "_py", (F.col("_ix") * n + F.col("_iy")).alias("cell"))
+    b = _disk(_points(build, build_id, build_x, build_y, "b", res_eff), F.lit(1), n)
+    b = b.select("_bid", "_bx", "_by", "cell")
     if broadcast_build:
         b = F.broadcast(b)
-    dist = F.sqrt((F.col("_px") - F.col("_bx")) ** 2 + (F.col("_py") - F.col("_by")) ** 2)
     # a (probe, build) pair meets exactly once (probe has ONE cell; the
     # build's 9 disk cells are distinct) — no dedup exchange needed
     return (
         p.join(b, "cell", "inner")
-        .withColumn("dist", dist)
+        .withColumn("dist", _dist())
         .filter(F.col("dist") <= radius)
         .select(F.col("_pid").alias(probe_id), F.col("_bid").alias(build_id), "dist")
     )
@@ -151,92 +145,34 @@ def knn_join(
 
     Returns (probe_id, build_id, dist, rank) with rank 1..k by Euclidean
     distance (ties broken by build_id for determinism, mirroring the
-    reference's stable rtree ordering)."""
+    reference's stable rtree ordering). `max_ring` caps the search disk."""
     w_cell = min(C._cell_w(res), C._cell_h(res))
     n = 1 << res
 
-    p0 = probes.select(
-        F.col(probe_id).alias("_pid"),
-        F.col(probe_x).alias("_px"),
-        F.col(probe_y).alias("_py"),
-    )
-    pix, piy = cell_ixy_cols(res, F.col("_px"), F.col("_py"))
-    p0 = p0.withColumn("_pix", pix).withColumn("_piy", piy)
-    b0 = with_cell_point(
-        build.select(
-            F.col(build_id).alias("_bid"),
-            F.col(build_x).alias("_bx"),
-            F.col(build_y).alias("_by"),
-        ),
-        res, "_bx", "_by", "cell",
-    )
+    p = _points(probes, probe_id, probe_x, probe_y, "p", res)
+    b = _points(build, build_id, build_x, build_y, "b", res)
+    b = b.select("_bid", "_bx", "_by", (F.col("_ix") * n + F.col("_iy")).alias("cell"))
     if broadcast_build:
-        b0 = F.broadcast(b0)
+        b = F.broadcast(b)
+    w = Window.partitionBy("_pid").orderBy(F.col("dist").asc_nulls_last(), F.col("_bid").asc())
 
-    dist = F.sqrt(
-        (F.col("_px") - F.col("_bx")) ** 2 + (F.col("_py") - F.col("_by")) ** 2
-    ).alias("dist")
+    def top_k(src: DataFrame, r: Column, how: str, keep: list) -> DataFrame:
+        cand = _disk(src, r, n).join(b, "cell", how).select(*keep, "_bid", _dist().alias("dist"))
+        return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
-    def probe_cells(src: DataFrame, r_lo: int, r_hi: int) -> DataFrame:
-        e = (
-            src.withColumn("_o", F.explode(_offsets_lit(r_lo, r_hi)))
-            .withColumn("_cix", F.col("_pix") + F.col("_o.dx"))
-            .withColumn("_ciy", F.col("_piy") + F.col("_o.dy"))
-            .filter(
-                (F.col("_cix") >= 0) & (F.col("_cix") < n)
-                & (F.col("_ciy") >= 0) & (F.col("_ciy") < n)
-            )
-        )
-        return with_cell_from_ixy(e, res, "_cix", "_ciy", "cell").select(
-            "_pid", "_px", "_py", "_pix", "_piy", "cell"
-        )
-
-    # Batched expansion: the first pass probes the full disk(r_batch) in ONE
-    # join (at a well-chosen resolution ~k candidates live within a ring or
-    # two, so the common case is a single pass with no driver iteration);
-    # only probes whose k-th candidate is not yet PROVEN nearest (bound:
-    # kdist ≤ r·cell_size) go into further batches.
-    r_batch = 2
-    unsat = p0
-    acc: DataFrame | None = None
-    topk: DataFrame | None = None
-    r_done = -1
-    w = Window.partitionBy("_pid").orderBy(F.col("dist").asc(), F.col("_bid").asc())
-    wp = Window.partitionBy("_pid")
-    while r_done < max_ring:
-        r_lo, r_hi = r_done + 1, min(r_done + 1 + r_batch, max_ring)
-        cand = probe_cells(unsat, r_lo, r_hi).join(b0, "cell", "inner").select(
-            "_pid", "_bid", dist
-        )
-        acc = cand if acc is None else acc.unionByName(cand)
-        r_done = r_hi
-        # ONE window pass yields the top-k AND the per-probe proof facts:
-        # the k-th candidate distance is max(dist) over the kept rows and
-        # "has k candidates" is their count — both computed over the same
-        # partitioning (no extra exchange). The materialized checkpoint is
-        # ≤ k rows per probe and IS the final answer when every probe is
-        # proven — the former shape checkpointed the full candidate set and
-        # ran the proof as a second full window.
-        topk = (
-            acc.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn("_nc", F.count(F.lit(1)).over(wp))
-            .withColumn("_kd", F.max("dist").over(wp))
-            .localCheckpoint(eager=True)
-        )
-        proven = (
-            topk.filter((F.col("_nc") >= k) & (F.col("_kd") <= F.lit(r_done * w_cell)))
-            .select("_pid")
-            .distinct()
-        )
-        unsat = unsat.join(F.broadcast(proven), "_pid", "left_anti")
-        if unsat.isEmpty():
-            break
-        # looping again: truncate acc's growing lineage (lazy — only pays
-        # if the next iteration actually computes it)
-        acc = acc.localCheckpoint(eager=False)
-
-    return topk.select(
+    # 1. first pass over the 3×3 disk; the left join keeps probes with no
+    #    candidate (their null rows count 0 and have no distance)
+    keep = ["_pid", "_px", "_py", "_ix", "_iy"]
+    first = top_k(p, F.lit(1), "left", keep).groupBy(*keep).agg(
+        F.count("_bid").alias("_nc"), F.max("dist").alias("_kd0")
+    )
+    # 2. ring size: the first r with kd0 <= r·w, capped at max_ring
+    r = F.ceil(F.col("_kd0") / w_cell)
+    r = F.when(F.col("_kd0") <= r * w_cell, r).otherwise(r + 1)
+    r = F.when(F.col("_nc") >= k, F.least(r, F.lit(max_ring))).otherwise(F.lit(max_ring))
+    # 3. final pass over disk(r)
+    out = top_k(first.withColumn("_r", r), F.col("_r"), "inner", ["_pid"])
+    return out.select(
         F.col("_pid").alias(probe_id),
         F.col("_bid").alias(build_id),
         F.col("dist"),

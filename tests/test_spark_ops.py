@@ -433,3 +433,109 @@ def test_knn_multi_iteration_sparse(spark):
         d = np.hypot(build.x - px, build.y - py)
         expect = build.assign(d=d).sort_values(["d", "bid"]).head(2).bid.tolist()
         assert grp.sort_values("rank").bid.tolist() == expect
+
+
+def _brute_topk(probes: pd.DataFrame, build: pd.DataFrame, k: int) -> dict:
+    """pid → (bids, dists) of the k nearest build points by (dist, bid),
+    with the same float expression as the Spark plan."""
+    out = {}
+    for p in probes.itertuples():
+        d = np.sqrt((p.x - build.x.to_numpy()) ** 2 + (p.y - build.y.to_numpy()) ** 2)
+        order = np.lexsort((build.bid.to_numpy(), d))[:k]
+        out[p.pid] = (build.bid.to_numpy()[order].tolist(), d[order])
+    return out
+
+
+def test_knn_exact_where_rings_differ(spark):
+    """knn_join sizes each probe's search disk from a 3×3 first pass; the
+    rows must equal a numpy brute force in a world whose probes need every
+    ring regime: a dense cluster (ring 0-1), sparse outskirts (ring 2 to
+    max_ring), a probe outside the build extent, co-located build points
+    (zero-distance ties broken by bid) and k > |corpus|."""
+    rng = np.random.default_rng(17)
+    res, k, max_ring = 16, 4, 40
+    w = min(C._cell_w(res), C._cell_h(res))
+    cluster = rng.uniform(10.0, 10.01, (80, 2))
+    outskirts = rng.uniform(9.95, 10.06, (10, 2))
+    twins = np.full((3, 2), 10.005)
+    xy = np.vstack([cluster, outskirts, twins])
+    build = pd.DataFrame({
+        "bid": rng.permutation(len(xy)).astype(np.int64), "x": xy[:, 0], "y": xy[:, 1],
+    })
+    pxy = np.vstack([
+        rng.uniform(10.0, 10.01, (20, 2)),   # inside the cluster
+        rng.uniform(9.95, 10.06, (30, 2)),   # outskirts
+        [[10.005, 10.005], [10.0, 10.1]],    # on the twins; outside the extent
+    ])
+    probes = pd.DataFrame({"pid": np.arange(len(pxy), dtype=np.int64), "x": pxy[:, 0], "y": pxy[:, 1]})
+
+    want = _brute_topk(probes, build, k)
+    rings = np.ceil(np.array([d[-1] for _, d in want.values()]) / w)
+    assert rings.min() <= 1 and ((rings >= 2) & (rings <= max_ring)).sum() >= 5
+    assert pxy[-1, 1] > build.y.max() and want[len(pxy) - 1][1][0] > 0.03
+    assert (want[len(pxy) - 2][1][:3] == 0.0).all()
+
+    def check(b: pd.DataFrame, kk: int) -> None:
+        out = knn_join(
+            spark.createDataFrame(probes), spark.createDataFrame(b), "pid", "bid",
+            k=kk, res=res, max_ring=max_ring,
+        ).toPandas()
+        assert set(out.pid) == set(probes.pid)
+        for pid, (bids, dists) in _brute_topk(probes, b, kk).items():
+            got = out[out.pid == pid].sort_values("rank")
+            assert got["rank"].tolist() == list(range(1, len(bids) + 1))
+            assert got.bid.tolist() == bids, (pid, got.bid.tolist(), bids)
+            np.testing.assert_allclose(got.dist.to_numpy(), dists, rtol=1e-12, atol=0)
+
+    check(build, k)
+    # k > |corpus|: every probe gets the whole corpus, ranked
+    check(build.iloc[-5:], 7)
+
+
+KNN_JOBS, RADIUS_JOBS = 3, 2
+
+
+def test_knn_radius_lazy_plan_and_job_count(spark):
+    """Deterministic plan/job gate: calling either join runs no Spark job
+    (no driver loop, no eager checkpoint), and a collect runs a pinned job
+    count: the build broadcast (reused by kNN's second pass), kNN's one
+    shuffle on the probe id, and the result."""
+    import inspect
+
+    from prclz_spark.operators import knn as K
+
+    src = inspect.getsource(K)
+    assert "localCheckpoint" not in src and "isEmpty" not in src
+
+    sc = spark.sparkContext
+
+    def jobs(group: str, f):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setJobGroup(group, group)
+        try:
+            out = f()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    rng = np.random.default_rng(5)
+    pts = pd.DataFrame({"pid": np.arange(200, dtype=np.int64),
+                        "x": rng.uniform(10, 10.05, 200), "y": rng.uniform(10, 10.05, 200)})
+    probes = spark.createDataFrame(pts)
+    build = spark.createDataFrame(pts.rename(columns={"pid": "bid"}))
+
+    knn, n_build = jobs("knn-build", lambda: knn_join(probes, build, "pid", "bid", k=3, res=14))
+    assert n_build == 0
+    rows, n_collect = jobs("knn-collect", knn.collect)
+    assert len(rows) == 600 and n_collect == KNN_JOBS
+    plan = knn._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("ReusedExchange") == 1, plan
+
+    radius, n_build = jobs(
+        "radius-build", lambda: within_distance_join(probes, build, "pid", "bid", 0.004, 14)
+    )
+    assert n_build == 0
+    _, n_collect = jobs("radius-collect", radius.collect)
+    assert n_collect == RADIUS_JOBS

@@ -3,12 +3,19 @@
 The scale claims in README/SURVEY are plan properties (broadcast build
 side, no probe shuffle, cogrouped kernels, pushdown). tests/test_plans.py
 asserts them; this tool makes them reviewable:  python tools/show_plans.py
+
+The output is stable: expression, plan and RDD ids are renumbered per
+section in order of first appearance, and scratch paths and generated file names are
+masked, so a regenerated EXPLAIN.md differs only where a plan changed.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -19,15 +26,45 @@ from prclz_spark import fixtures as FX  # noqa: E402
 from prclz_spark.session import get_spark  # noqa: E402
 
 
+_HEADER = """# Physical plans of the flagship operators
+
+Generated by `python tools/show_plans.py` (4×4 fixture world; the
+plan SHAPE is scale-independent — sizes only move AQE thresholds).
+Expression ids (`#n`), `plan_id`s and RDD ids are numbered per section in
+order of first appearance; `<tmp>`, `<uuid>` and `<id>` mask scratch paths and
+generated file names. The round-8 before/after dumps of the spatial probe
+paths live in `plans/r08/`.
+"""
+
+_MASKS = (
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
+    (re.compile(r"\b(add|delete|rewrite)-[0-9a-f]{12}\b"), r"\1-<id>"),
+)
+_IDS = tuple(re.compile(p) for p in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"))
+
+
 def fmt(df) -> str:
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
 
 
+def stable(plan: str, tmp: str) -> str:
+    """`plan` with scratch paths and generated names masked and ids
+    renumbered in order of first appearance."""
+    plan = plan.replace(tmp, "<tmp>")
+    for pat, repl in _MASKS:
+        plan = pat.sub(repl, plan)
+    for pat in _IDS:
+        seen: dict = {}
+        plan = pat.sub(lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen) + 1)), plan)
+    return plan
+
+
 def main() -> None:
     spark = get_spark("local[8]", app="show-plans", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    tmp = tempfile.mkdtemp(prefix="show_plans_")
     lines, gadm, bldgs = FX.geo_world(spark, 4, 4)
     res = C.choose_resolution(*FX.grid_params(4, 4), n_features=64)
 
@@ -77,8 +114,10 @@ def main() -> None:
     sections.append(
         (
             "kNN ring expansion (J8)",
-            "per-round: probe cells ⋈ broadcast(build disk cells); driver only "
-            "coordinates rounds, never collects data.",
+            "one lazy plan: probe 3×3 disks ⋈ broadcast(build) → top-k window "
+            "→ per-probe ring size → probe disk(r) ⋈ the SAME broadcast "
+            "(reused) → top-k window. One shuffle on the probe id; no driver "
+            "loop, no checkpoint.",
             fmt(knn_join(probes, probes.selectExpr("pid as bid", "x", "y"), "pid", "bid", k=3, res=14)),
         )
     )
@@ -109,11 +148,9 @@ def main() -> None:
         )
     )
 
-    import tempfile
-
     from prclz_spark.sources import iceberg_lite as IL
 
-    t = tempfile.mkdtemp(prefix="plans_iceberg_")
+    t = os.path.join(tmp, "iceberg")
     IL.create_table(t, "doc_id bigint, v bigint")
     IL.append(spark.range(100).selectExpr("id as doc_id", "id * 3 as v"), t,
               stats_cols=["v"])
@@ -132,7 +169,7 @@ def main() -> None:
 
     from prclz_spark.operators.dedup import minhash_pairs_against, minhash_signatures
 
-    sig_dir = tempfile.mkdtemp(prefix="plans_sigs_") + "/sigs.parquet"
+    sig_dir = os.path.join(tmp, "sigs.parquet")
     minhash_signatures(docs, "doc_id", "text").write.parquet(sig_dir)
     corpus_sigs = spark.read.parquet(sig_dir)
     batch = spark.createDataFrame(
@@ -238,9 +275,7 @@ def main() -> None:
         )
     )
 
-    from prclz_spark.sources import iceberg_lite as IL
-    import tempfile
-    ing = tempfile.mkdtemp() + "/ingest_tbl"
+    ing = os.path.join(tmp, "ingest_tbl")
     from prclz_spark.streaming.ingest import iceberg_batch_sink
     sink = iceberg_batch_sink(ing, "q", stats_cols=["doc_id"])
     for b in range(3):
@@ -315,15 +350,14 @@ def main() -> None:
         )
     )
 
-    out = ["# Physical plans of the flagship operators\n",
-           "Generated by `python tools/show_plans.py` (4×4 fixture world; the",
-           "plan SHAPE is scale-independent — sizes only move AQE thresholds).\n"]
+    out = [_HEADER]
     for title, claim, plan in sections:
-        out.append(f"\n## {title}\n\n{claim}\n\n```\n{plan.strip()}\n```\n")
+        out.append(f"\n## {title}\n\n{claim}\n\n```\n{stable(plan, tmp).strip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote EXPLAIN.md")
     spark.stop()
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

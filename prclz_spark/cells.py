@@ -1,4 +1,4 @@
-"""Hierarchical spatial cell index (H3/S2-style) — pure numpy quadtree.
+"""Spatial cell index (H3/S2-style) — a pure numpy grid per resolution.
 
 The reference uses in-memory R-trees (`prclz/topology.py:359-362`, geopandas
 `sindex` at `scripts/split-buildings/split_buildings.py:137`) — a per-process
@@ -9,8 +9,13 @@ id, which Catalyst plans as ordinary broadcast/sort-merge hash joins.
 
 Cell id layout (int64, no native deps — deterministic across JVM/Python):
 
-    bits 58..62 : resolution r (0..28)
-    bits 0..57  : interleaved (Morton/Z-order) quadtree path, 2 bits/level
+    bits 58..62    : resolution r (0..28)
+    bits r..2r-1   : column index ix
+    bits 0..r-1    : row index iy
+
+i.e. ``cell_id = (r << 58) | (ix << r) | iy``: a bijection of the 2^r × 2^r
+grid at each resolution, so the JVM side (functions/st.cell_col) builds the
+same id with one shift and two ORs.
 
 World frame is lon ∈ [-180,180], lat ∈ [-90,90]. At resolution r the world is
 a 2^r × 2^r grid. Equivalent role to H3 `polyfill`/`kRing`: `cover()` /
@@ -40,27 +45,6 @@ MAX_COVER_CELLS = 1 << 22
 _WORLD = (-180.0, -90.0, 180.0, 90.0)
 
 
-def _interleave(ix: np.ndarray, iy: np.ndarray, r: int) -> np.ndarray:
-    """Morton-encode two r-bit ints → 2r-bit int (vectorized)."""
-    ix = ix.astype(np.uint64)
-    iy = iy.astype(np.uint64)
-    out = np.zeros_like(ix)
-    for b in range(r):
-        out |= ((ix >> np.uint64(b)) & np.uint64(1)) << np.uint64(2 * b)
-        out |= ((iy >> np.uint64(b)) & np.uint64(1)) << np.uint64(2 * b + 1)
-    return out
-
-
-def _deinterleave(code: np.ndarray, r: int):
-    code = code.astype(np.uint64)
-    ix = np.zeros_like(code)
-    iy = np.zeros_like(code)
-    for b in range(r):
-        ix |= ((code >> np.uint64(2 * b)) & np.uint64(1)) << np.uint64(b)
-        iy |= ((code >> np.uint64(2 * b + 1)) & np.uint64(1)) << np.uint64(b)
-    return ix.astype(np.int64), iy.astype(np.int64)
-
-
 def _cell_w(res: int) -> float:
     return (_WORLD[2] - _WORLD[0]) / (1 << res)
 
@@ -78,8 +62,9 @@ def _grid_index(x: np.ndarray, y: np.ndarray, res: int):
 
 
 def cell_id(ix: np.ndarray, iy: np.ndarray, res: int) -> np.ndarray:
-    code = _interleave(np.asarray(ix), np.asarray(iy), res)
-    return (np.uint64(res) << np.uint64(RES_BITS_SHIFT) | code).astype(np.int64)
+    ix = np.asarray(ix, dtype=np.int64)
+    iy = np.asarray(iy, dtype=np.int64)
+    return (res << RES_BITS_SHIFT) | (ix << res) | iy
 
 
 def cell_of_xy(x, y, res: int) -> np.ndarray:
@@ -92,11 +77,10 @@ def cell_of_xy(x, y, res: int) -> np.ndarray:
 
 
 def cell_ixy(cell):
-    cell = np.atleast_1d(np.asarray(cell)).astype(np.uint64)
-    res = int((cell[0] >> np.uint64(RES_BITS_SHIFT)))
-    code = cell & ((np.uint64(1) << np.uint64(RES_BITS_SHIFT)) - np.uint64(1))
-    ix, iy = _deinterleave(code, res)
-    return ix, iy, res
+    cell = np.atleast_1d(np.asarray(cell, dtype=np.int64))
+    res = int(cell[0] >> RES_BITS_SHIFT)
+    mask = (1 << res) - 1
+    return (cell >> res) & mask, cell & mask, res
 
 
 def cell_bounds(cell: int):
@@ -248,9 +232,7 @@ def cover(g: "G.Geom", res: int) -> np.ndarray:
     if len(ix_all) == 0:
         xmin, ymin, xmax, ymax = G.bounds(g)
         return cover_bbox(xmin, ymin, xmax, ymax, res)
-    n = 1 << res
-    lin = np.unique(ix_all.astype(np.int64) * n + iy_all.astype(np.int64))
-    return cell_id(lin // n, lin % n, res)
+    return np.unique(cell_id(ix_all, iy_all, res))
 
 
 def ring(cell: int, r: int) -> np.ndarray:

@@ -739,7 +739,7 @@ def st_cells(res: int):
 def st_centroid_xy_cell(res: int):
     """Fused probe-side prep: WKB → struct<x, y, cell> in ONE Arrow phase.
 
-    Chaining st_x(st_centroid(g)), st_y(st_centroid(g)), st_cell_point(x,y)
+    Chaining st_x(st_centroid(g)), st_y(st_centroid(g)) and a cell UDF
     would create three ArrowEvalPython phases (and as many Python worker
     pools per stage); this fusion keeps the probe path at a single
     JVM→Python round trip — the fork-storm fix measured in bench.py."""
@@ -813,26 +813,14 @@ def st_centroid_xy_cell(res: int):
     return _f.asNondeterministic()
 
 
-def st_cell_point(res: int):
-    """cell_of(x, y) → BIGINT — probe-side single cell (J4 fast path)."""
-
-    @pandas_udf(LongType())
-    def _f(x: pd.Series, y: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(C.cell_of_xy(np.asarray(x, dtype=float), np.asarray(y, dtype=float), res))
-
-    return _f
-
-
 # --- pure-JVM (codegen) cell expressions (round-8, guide §4.1) -------------
 # The probe-side cell id is integer/float arithmetic, not geometry: express
 # it as Column expressions so point-probe paths (PIP / kNN / radius joins)
-# carry NO ArrowEvalPython node at all. Bit-equal to cells.cell_of_xy for
-# every finite coordinate (identical IEEE double ops in identical order;
-# asserted value-for-value in tests/test_spark_ops.py). NULL coordinates
-# yield a NULL cell (the UDF yielded the clamped corner cell (0,0), which
-# exact refines always rejected — NULL rejects at the join instead).
+# carry NO ArrowEvalPython node at all. cell_col(res, *cell_ixy_cols(...))
+# is bit-equal to cells.cell_of_xy for every finite coordinate (identical
+# IEEE double ops in identical order; asserted value-for-value in
+# tests/test_spark_ops.py). NULL coordinates yield a NULL cell, which the
+# equi-join rejects.
 
 from pyspark.sql import Column
 from pyspark.sql import functions as _F
@@ -849,77 +837,8 @@ def cell_ixy_cols(res: int, x: Column, y: Column) -> tuple:
     return ix, iy
 
 
-def _spread_bits(v: Column) -> Column:
-    """Morton bit-spread: place the low 29 bits of v at even positions
-    (classic magic-mask interleave; equals cells._interleave bit-for-bit)."""
-    v = v.bitwiseAND(_F.lit(0x1FFFFFFF))
-    v = (v.bitwiseOR(_F.shiftleft(v, 16))).bitwiseAND(_F.lit(0x0000FFFF0000FFFF))
-    v = (v.bitwiseOR(_F.shiftleft(v, 8))).bitwiseAND(_F.lit(0x00FF00FF00FF00FF))
-    v = (v.bitwiseOR(_F.shiftleft(v, 4))).bitwiseAND(_F.lit(0x0F0F0F0F0F0F0F0F))
-    v = (v.bitwiseOR(_F.shiftleft(v, 2))).bitwiseAND(_F.lit(0x3333333333333333))
-    v = (v.bitwiseOR(_F.shiftleft(v, 1))).bitwiseAND(_F.lit(0x5555555555555555))
-    return v
-
-
-def cell_from_ixy_cols(res: int, ix: Column, iy: Column) -> Column:
-    """(ix, iy) → cell id (res tag | Morton code), cells.cell_id verbatim."""
-    code = _spread_bits(ix).bitwiseOR(_F.shiftleft(_spread_bits(iy), 1))
-    return _F.lit(res << C.RES_BITS_SHIFT).bitwiseOR(code)
-
-
-def st_cell_point_col(res: int, x: Column, y: Column) -> Column:
-    """Pure-JVM equivalent of ``st_cell_point(res)(x, y)`` — one codegen
-    expression, no Python boundary.
-
-    NOTE: each Morton spread step references its input twice, so this
-    single-Column form duplicates the (x, y) subtrees ~32× in the Catalyst
-    tree. Runtime is fine (codegen CSE), but the DRIVER re-optimizes the
-    blown-up tree on every plan build (~3 s measured on the skew-fixture
-    probe). Use it only where x/y are plain attributes; operators should
-    call :func:`with_cell_point` / :func:`with_cell_from_ixy`, which chain
-    each step through a named column and keep the tree linear."""
-    ix, iy = cell_ixy_cols(res, x, y)
-    return cell_from_ixy_cols(res, ix, iy)
-
-
-_SPREAD_STEPS = (
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-)
-
-
-def with_cell_from_ixy(df, res: int, ix_col: str, iy_col: str, out: str = "cell"):
-    """Append ``out`` = cell id of grid indices (ix_col, iy_col) via a chain
-    of named single-use columns: every Morton step materializes as ONE
-    attribute, so the Catalyst tree stays linear in res (see
-    st_cell_point_col's note). Bit-equal to cells.cell_id."""
-    tx, ty = "_mrt_x", "_mrt_y"
-    for tmp, src in ((tx, ix_col), (ty, iy_col)):
-        df = df.withColumn(tmp, _F.col(src).bitwiseAND(_F.lit(0x1FFFFFFF)))
-        for sh, mask in _SPREAD_STEPS:
-            df = df.withColumn(
-                tmp,
-                (_F.col(tmp).bitwiseOR(_F.shiftleft(_F.col(tmp), sh))).bitwiseAND(
-                    _F.lit(mask)
-                ),
-            )
-    return df.withColumn(
-        out,
-        _F.lit(res << C.RES_BITS_SHIFT).bitwiseOR(
-            _F.col(tx).bitwiseOR(_F.shiftleft(_F.col(ty), 1))
-        ),
-    ).drop(tx, ty)
-
-
-def with_cell_point(df, res: int, x: str, y: str, out: str = "cell"):
-    """Append ``out`` = containing cell of point columns (x, y) — the
-    DataFrame-level form of st_cell_point_col (same bit-exact arithmetic,
-    linear plan tree)."""
-    ix, iy = cell_ixy_cols(res, _F.col(x), _F.col(y))
-    df = df.withColumn("_mrt_ix", ix).withColumn("_mrt_iy", iy)
-    return with_cell_from_ixy(df, res, "_mrt_ix", "_mrt_iy", out).drop(
-        "_mrt_ix", "_mrt_iy"
-    )
+def cell_col(res: int, ix: Column, iy: Column) -> Column:
+    """(ix, iy) grid-index columns → cell id, cells.cell_id verbatim:
+    ``(res << 58) | (ix << res) | iy`` — one shift and two ORs, so the
+    Catalyst tree stays linear and codegen sees one expression."""
+    return _F.lit(res << C.RES_BITS_SHIFT).bitwiseOR(_F.shiftleft(ix, res)).bitwiseOR(iy)

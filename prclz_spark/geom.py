@@ -1245,17 +1245,6 @@ def nearest_point_on(g: Geom, px: float, py: float):
     return a + t * ab
 
 
-def explode(g: Geom):
-    """Multipart → list of single-part Geoms (`prclz/_parcels.py:86`)."""
-    if g.kind == MULTIPOLYGON:
-        return [Geom(POLYGON, rings) for rings in g.data]
-    if g.kind == MULTILINESTRING:
-        return [Geom(LINESTRING, l) for l in g.data]
-    if g.kind == MULTIPOINT:
-        return [Geom(POINT, p.copy()) for p in g.data]
-    return [g]
-
-
 def convex_hull(pts: np.ndarray) -> np.ndarray:
     """Andrew monotone chain; returns closed ring CCW."""
     pts = np.unique(np.asarray(pts, dtype=np.float64).reshape(-1, 2), axis=0)
@@ -1344,30 +1333,3 @@ def representative_point(g: Geom) -> np.ndarray:
         if best is not None:
             return best[1]
     return np.asarray(c, dtype=np.float64)  # degenerate fallback
-
-
-# ---------------------------------------------------------------------------
-# Mercator transform (EPSG:4326 ↔ 3395), `prclz/_parcels.py:34-35,48`
-# ---------------------------------------------------------------------------
-
-_A = 6378137.0
-_E = 0.081819190842621486
-
-
-def mercator_fwd(lonlat: np.ndarray) -> np.ndarray:
-    lon = np.radians(lonlat[..., 0])
-    lat = np.radians(lonlat[..., 1])
-    x = _A * lon
-    es = _E * np.sin(lat)
-    y = _A * np.log(np.tan(np.pi / 4 + lat / 2) * ((1 - es) / (1 + es)) ** (_E / 2))
-    return np.stack([x, y], axis=-1)
-
-
-def mercator_inv(xy: np.ndarray) -> np.ndarray:
-    lon = xy[..., 0] / _A
-    t = np.exp(-xy[..., 1] / _A)
-    lat = np.pi / 2 - 2 * np.arctan(t)
-    for _ in range(8):  # fixed-point iteration for ellipsoidal latitude
-        es = _E * np.sin(lat)
-        lat = np.pi / 2 - 2 * np.arctan(t * ((1 - es) / (1 + es)) ** (_E / 2))
-    return np.stack([np.degrees(lon), np.degrees(lat)], axis=-1)

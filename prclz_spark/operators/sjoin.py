@@ -35,7 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.st import st_cells, st_contains, st_contains_xy, st_intersects, with_cell_point
+from ..functions.st import (
+    cell_col, cell_ixy_cols, st_cells, st_contains, st_contains_xy, st_intersects,
+)
 from .skew import salt_exploded_join
 
 _PG, _BG = "_probe_geom", "_build_geom"
@@ -172,14 +174,15 @@ def pip_join(
     If `points` already carries a `cell` column (e.g. from the fused
     st_centroid_xy_cell prep) it is used as-is — one fewer Python phase.
 
-    Round-8: the probe cell is a pure-JVM codegen expression
-    (with_cell_point, bit-equal to the former pandas UDF), so the probe
-    side of this join carries NO ArrowEvalPython node at all — the only
-    Python phase left is the exact refine (guide §4.1)."""
+    The probe cell is one pure-JVM codegen projection
+    (cell_col over cell_ixy_cols, bit-equal to cells.cell_of_xy and so in
+    the layout of the st_cells build cover), so the probe side of this
+    join carries NO ArrowEvalPython node at all — the only Python phase
+    left is the exact refine (guide §4.1)."""
     if "cell" in points.columns:
         p = points
     else:
-        p = with_cell_point(points, res, x, y, "cell")
+        p = points.withColumn("cell", cell_col(res, *cell_ixy_cols(res, F.col(x), F.col(y))))
     b = polys.select(F.col(poly_id), F.col(poly_geom).alias(_BG)).withColumn(
         "cell", F.explode(st_cells(res)(F.col(_BG)))
     )

@@ -51,6 +51,21 @@ def test_ring_and_disk_counts():
     assert len(C.disk(c, 2)) == 25
 
 
+def test_cell_id_roundtrip_every_res():
+    """cell_ixy inverts cell_id at every resolution, the grid's far corner
+    included, and the index bits never reach the res tag."""
+    rng = np.random.default_rng(3)
+    for res in range(C.MAX_RES + 1):
+        top = (1 << res) - 1
+        ix = np.concatenate([[0, top, 0, top], rng.integers(0, top + 1, 50)])
+        iy = np.concatenate([[0, top, top, 0], rng.integers(0, top + 1, 50)])
+        cells = C.cell_id(ix, iy, res)
+        assert (cells >> C.RES_BITS_SHIFT == res).all(), res
+        gx, gy, r = C.cell_ixy(cells)
+        assert r == res and (gx == ix).all() and (gy == iy).all(), res
+        assert len(np.unique(cells)) == len(set(zip(ix.tolist(), iy.tolist()))), res
+
+
 def test_cell_bounds_contains_point():
     cell = int(C.cell_of_xy(0.5, 0.5, 12)[0])
     x0, y0, x1, y1 = C.cell_bounds(cell)

@@ -67,21 +67,10 @@ def test_contains():
     assert not G.contains(a, cross)
 
 
-def test_mercator_roundtrip():
-    pts = np.array([[12.3, -45.6], [0.0, 0.0], [179.0, 89.0], [-120.5, 33.3]])
-    assert np.allclose(pts, G.mercator_inv(G.mercator_fwd(pts)), atol=1e-9)
-
-
 def test_convex_hull():
     pts = np.array([[0, 0], [2, 0], [2, 2], [0, 2], [1, 1], [0.5, 0.5]])
     ring = G.convex_hull(pts)
     assert abs(abs(G._ring_area(ring)) - 4.0) < 1e-12
-
-
-def test_explode():
-    mp = G.wkt_loads("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((2 2, 3 2, 3 3, 2 3, 2 2)))")
-    parts = G.explode(mp)
-    assert len(parts) == 2 and all(p.kind == G.POLYGON for p in parts)
 
 
 def test_st_nearest_points_and_offset_curve(spark):

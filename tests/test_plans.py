@@ -26,6 +26,29 @@ def test_pip_join_is_broadcast_no_probe_shuffle(spark):
     assert plan.count("ArrowEvalPython") == 3, plan
 
 
+def test_pip_join_probe_cell_is_one_projection(spark):
+    """A pip_join on raw x/y probes computes the probe cell id in ONE
+    Project with one shiftleft (cells.cell_id's (res << 58) | (ix << res) |
+    iy), not a chain of bit-spreading projections. The probes come from
+    spark.range: a local createDataFrame would fold the cell expression into
+    a LocalRelation and hide it."""
+    lines, gadm, bldgs = FX.geo_world(spark, 4, 4)
+    x0, y0, x1, y1 = FX.grid_params(4, 4)
+    res = C.choose_resolution(x0, y0, x1, y1, n_features=64)
+    pts = spark.range(64).select(
+        F.col("id").alias("pid"),
+        (F.lit(x0) + (F.col("id") % 8 + 0.5) * ((x1 - x0) / 8)).alias("x"),
+        (F.lit(y0) + (F.floor(F.col("id") / 8) + 0.5) * ((y1 - y0) / 8)).alias("y"),
+    )
+    out = pip_join(pts, gadm, "pid", "gadm", res=res)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "_mrt_" not in plan, plan
+    assert plan.count("shiftleft") == 1, plan
+    cell_projects = [ln for ln in plan.splitlines() if "Project [" in ln and " AS cell#" in ln]
+    assert len(cell_projects) == 1 and "shiftleft" in cell_projects[0], plan
+    assert out.count() == 64  # every probe sits inside one region
+
+
 def test_parquet_filter_pushdown(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = df.filter(F.col("l_quantity") > 45).select("l_orderkey", "l_quantity")

@@ -384,11 +384,11 @@ def test_knn_adversarial_edges(spark):
 
 
 def test_cell_point_col_bit_equal_udf(spark):
-    """Round-8: the pure-JVM cell expression (st_cell_point_col) must be
+    """The pure-JVM cell expression (cell_col over cell_ixy_cols) must be
     bit-equal to cells.cell_of_xy for every finite coordinate — the PIP /
     kNN / radius probe paths ride on it. Sweep: fixture-like coords, cell
     edges, world corners, negatives, several resolutions."""
-    from prclz_spark.functions.st import st_cell_point_col
+    from prclz_spark.functions.st import cell_col, cell_ixy_cols
 
     rng = np.random.default_rng(11)
     xs = np.concatenate([
@@ -408,7 +408,7 @@ def test_cell_point_col_bit_equal_udf(spark):
     df = spark.createDataFrame(pdf)
     for res in (3, 7, 14, 16, 28):
         got = (
-            df.select(st_cell_point_col(res, F.col("x"), F.col("y")).alias("c"))
+            df.select(cell_col(res, *cell_ixy_cols(res, F.col("x"), F.col("y"))).alias("c"))
             .toPandas()["c"].to_numpy()
         )
         want = C.cell_of_xy(xs, ys, res)

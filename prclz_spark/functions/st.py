@@ -1,4 +1,5 @@
-"""`st_*` scalar geometry functions as Arrow-batched pandas UDFs.
+"""`st_*` scalar geometry functions as Arrow-batched pandas UDFs (and one
+Arrow UDF, `st_centroid_xy_cell`, that reads the WKB buffers directly).
 
 Spark-side face of the numpy geometry core (SURVEY.md §2.6). Every function
 takes/returns whole Arrow batches (pandas Series) — the "vectorized
@@ -16,7 +17,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -736,78 +738,46 @@ def st_cells(res: int):
     return _f
 
 
+def _binary_buffers(a: pa.Array) -> tuple:
+    """(data, offsets, valid) numpy views of a binary Arrow array's buffers,
+    the layout `geom.wkb_centroids` reads."""
+    _, offsets, data = a.buffers()
+    off_type = np.int64 if pa.types.is_large_binary(a.type) else np.int32
+    offsets = np.frombuffer(offsets, off_type)[a.offset:a.offset + len(a) + 1]
+    data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    return data, offsets, a.is_valid().to_numpy(zero_copy_only=False)
+
+
 def st_centroid_xy_cell(res: int):
     """Fused probe-side prep: WKB → struct<x, y, cell> in ONE Arrow phase.
 
     Chaining st_x(st_centroid(g)), st_y(st_centroid(g)) and a cell UDF
     would create three ArrowEvalPython phases (and as many Python worker
     pools per stage); this fusion keeps the probe path at a single
-    JVM→Python round trip — the fork-storm fix measured in bench.py."""
-    from pyspark.sql.types import LongType as _Long
+    JVM→Python round trip — the fork-storm fix measured in bench.py.
 
+    An Arrow UDF: the centroids are decoded straight from the column's
+    offsets and data buffers (`geom.wkb_centroids`, bit-equal to
+    `G.centroid` per row), with no pandas conversion and no Python object
+    per row. A null geometry gives null x, y and cell."""
     _schema = StructType(
         [
             StructField("x", DoubleType()),
             StructField("y", DoubleType()),
-            StructField("cell", _Long()),
+            StructField("cell", LongType()),
         ]
     )
 
-    @pandas_udf(_schema)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        # Round-8 fast path: batch WKB decode + grouped-by-ring-length
-        # vectorized shoelace centroid for single-ring polygons (the 10⁹-row
-        # building shape). BIT-exact with the per-row G.centroid loop: the
-        # stacked rows reduce with numpy's pairwise summation along a
-        # contiguous axis — the same grouping np.sum applies to each ring's
-        # own 1D pass (asserted row-for-row in tests/test_geom_batch.py) —
-        # and the (|a|·c)/|a| double-rounding is replicated verbatim.
-        # Everything else (multipart, holes, lines, None) takes the scalar
-        # loop.
-        geoms = G.wkb_loads_batch([None if b is None else bytes(b) for b in s])
-        m = len(geoms)
-        xs = np.full(m, np.nan)
-        ys = np.full(m, np.nan)
-        groups: dict[int, list] = {}
-        other: list = []
-        for i, g in enumerate(geoms):
-            if g is None:
-                continue
-            if g.kind == G.POLYGON and len(g.data) == 1:
-                groups.setdefault(len(g.data[0]), []).append(i)
-            else:
-                other.append(i)
-        for L, idxs in groups.items():
-            if L < 2:
-                other.extend(idxs)
-                continue
-            arr = np.stack([geoms[i].data[0] for i in idxs])
-            x, y = arr[:, :-1, 0], arr[:, :-1, 1]
-            x1, y1 = arr[:, 1:, 0], arr[:, 1:, 1]
-            cross = x * y1 - x1 * y
-            a = 0.5 * cross.sum(axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cx = ((x + x1) * cross).sum(axis=1) / (6 * a)
-                cy = ((y + y1) * cross).sum(axis=1) / (6 * a)
-                w = np.abs(a)
-                rx = (w * cx) / w  # scalar path's acc/tot double-rounding
-                ry = (w * cy) / w
-            ii = np.asarray(idxs)
-            nz = a != 0
-            xs[ii[nz]] = rx[nz]
-            ys[ii[nz]] = ry[nz]
-            if (~nz).any():
-                # zero-area ring: scalar fallback (mean incl. closing vertex)
-                for j in ii[~nz]:
-                    c = G.centroid(geoms[j])
-                    xs[j], ys[j] = c[0], c[1]
-        for i in other:
-            c = G.centroid(geoms[i])
-            xs[i], ys[i] = c[0], c[1]
-        cells = C.cell_of_xy(np.nan_to_num(xs), np.nan_to_num(ys), res)
-        return pd.DataFrame({"x": xs, "y": ys, "cell": np.where(np.isnan(xs), None, cells)})
+    @arrow_udf(_schema)
+    def _f(s: pa.Array) -> pa.Array:
+        xy = G.wkb_centroids(*_binary_buffers(s))
+        nan = np.isnan(xy[:, 0])
+        cells = C.cell_of_xy(np.nan_to_num(xy[:, 0]), np.nan_to_num(xy[:, 1]), res)
+        return pa.StructArray.from_arrays(
+            [pa.array(xy[:, 0], from_pandas=True), pa.array(xy[:, 1], from_pandas=True),
+             pa.array(cells, mask=nan)],
+            names=["x", "y", "cell"],
+        )
 
     # deterministic; flagged only so a pushed-down `cell IS NOT NULL` cannot evaluate it twice
     return _f.asNondeterministic()

@@ -536,6 +536,107 @@ def wkb_dumps_batch(geoms) -> list:
     return out
 
 
+def _ring_layout(raw: bytes):
+    """The rings of a canonical WKB Polygon or MultiPolygon as (byte offset
+    of the first coordinate, point count, is shell), in `centroid` order;
+    None unless every header is little-endian with exact kind bytes (no flag
+    bits, members exactly Polygon) and the rings end at the buffer's end."""
+    rings: list = []
+
+    def polygon_at(off: int) -> int:
+        order, kind, nr = struct.unpack_from("<BII", raw, off)
+        if order != 1 or kind != POLYGON:
+            raise ValueError(kind)
+        off += 9
+        for j in range(nr):
+            (n,) = struct.unpack_from("<I", raw, off)
+            rings.append((off + 4, n, j == 0))
+            off += 4 + 16 * n
+        return off
+
+    try:
+        order, kind, count = struct.unpack_from("<BII", raw, 0)
+        if order != 1 or kind not in (POLYGON, MULTIPOLYGON):
+            return None
+        end = polygon_at(0) if kind == POLYGON else 9
+        for _ in range(count if kind == MULTIPOLYGON else 0):
+            end = polygon_at(end)
+    except (struct.error, ValueError):
+        return None
+    return rings if end == len(raw) else None
+
+
+def _layout_centroids(rows: np.ndarray, rings: list):
+    """`centroid` of m buffers that share one ring layout, given as an (m, L)
+    byte matrix: the same per-ring shoelace in the same order (zero-area
+    rings skipped, holes subtracted), so each row is bit-equal to the scalar
+    result. numpy sums each row of a C-contiguous (m, k) array along its
+    last axis with the same pairwise summation as a 1-D sum. Returns the
+    (m, 2) centroids and the mask of rows whose total area is nonzero."""
+    m = len(rows)
+    acc_x, acc_y, tot = np.zeros(m), np.zeros(m), np.zeros(m)
+    for off, n, shell in rings:
+        r = np.ascontiguousarray(rows[:, off:off + 16 * n]).view("<f8").reshape(m, n, 2)
+        x, y = r[:, :-1, 0], r[:, :-1, 1]
+        x1, y1 = r[:, 1:, 0], r[:, 1:, 1]
+        cross = x * y1 - x1 * y
+        a = 0.5 * cross.sum(axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cx = ((x + x1) * cross).sum(axis=1) / (6 * a)
+            cy = ((y + y1) * cross).sum(axis=1) / (6 * a)
+        w = np.abs(a) if shell else -np.abs(a)
+        nz = a != 0
+        acc_x = np.where(nz, acc_x + w * cx, acc_x)
+        acc_y = np.where(nz, acc_y + w * cy, acc_y)
+        tot = np.where(nz, tot + w, tot)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.column_stack([acc_x / tot, acc_y / tot]), tot != 0
+
+
+def wkb_centroids(data: np.ndarray, offsets: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """``centroid(wkb_loads(b))`` for every buffer ``b = data[offsets[i]:
+    offsets[i + 1]]`` of a binary column (an Arrow binary array's data and
+    offsets buffers), bit for bit; (n, 2), NaN where ``valid`` is False.
+
+    Rows whose 5-byte header is a little-endian Polygon or MultiPolygon are
+    grouped by byte length. When a group's first row has a canonical layout
+    (see `_ring_layout`), the rows whose non-coordinate bytes equal its own
+    have every ring at the same byte range, so they decode with one (m, L)
+    gather and `_layout_centroids`. Every other row takes the scalar path:
+    other kinds, non-canonical bytes, a second layout of one length, a total
+    area of 0 (the vertex-mean fallback); malformed buffers raise as
+    `wkb_loads` does."""
+    n = len(offsets) - 1
+    out = np.full((n, 2), np.nan)
+    starts = offsets[:-1].astype(np.int64)
+    lens = np.diff(offsets).astype(np.int64)
+    done = ~valid
+    cand = np.flatnonzero(valid & (lens >= 9))
+    head = data[starts[cand, None] + np.arange(5)]
+    cand = cand[(head[:, 0] == 1) & np.isin(head[:, 1], (POLYGON, MULTIPOLYGON))
+                & ~head[:, 2:].any(axis=1)]
+    cand = cand[np.argsort(lens[cand], kind="stable")]
+    for idx in np.split(cand, np.flatnonzero(np.diff(lens[cand])) + 1):
+        if not len(idx):
+            continue
+        size = int(lens[idx[0]])
+        rows = data[starts[idx, None] + np.arange(size)]
+        rings = _ring_layout(rows[0].tobytes())
+        if rings is None:
+            continue
+        header = np.ones(size, dtype=bool)
+        for off, k, _ in rings:
+            header[off:off + 16 * k] = False
+        same = (rows[:, header] == rows[0, header]).all(axis=1)
+        xy, ok = _layout_centroids(rows[same], rings)
+        hit = idx[same][ok]
+        out[hit] = xy[ok]
+        done[hit] = True
+    for i in np.flatnonzero(~done):
+        out[i] = centroid(wkb_loads(data[starts[i]:starts[i] + lens[i]].tobytes()))
+    return out
+
+
 # ---------------------------------------------------------------------------
 # WKT codec (fixture boundary format, `prclz/utils.py:45-61` convention)
 # ---------------------------------------------------------------------------
@@ -741,9 +842,9 @@ def _all_coords(g: Geom):
 # The per-geometry WKB decode is irreducible, but the coordinate math after
 # decode is not: these helpers flatten every part/ring of a batch into ONE
 # concatenated coordinate table and compute shoelace/centroid/length/bounds
-# with reduceat + bincount segment reductions (the pattern proven hot-path
-# in functions/st.st_centroid_xy_cell). Semantics match area()/centroid()/
-# length()/bounds() exactly (same formulas, same degenerate fallbacks).
+# with reduceat + bincount segment reductions. Semantics match area()/
+# centroid()/length()/bounds() to rounding (same formulas, same degenerate
+# fallbacks); `wkb_centroids` is the bit-exact centroid decode.
 
 
 def _part_table(parts: list, owners: list):

@@ -30,9 +30,13 @@ _OUT_SCHEMA = "block_id string, geometry binary, complexity int, centroids_multi
 _COLS = ["block_id", "geometry", "complexity", "centroids_multipoint"]
 
 
-def _k_row(block_id: str, block: G.Geom, xs: np.ndarray, ys: np.ndarray) -> tuple | None:
+def _k_row(
+    block_id: str, block_wkb: bytes, block: G.Geom, xs: np.ndarray, ys: np.ndarray
+) -> tuple | None:
     """One block's output row in `_OUT_SCHEMA` order, or None when no
-    centroid lies in the block. A `block_complexity` failure raises."""
+    centroid lies in the block; `block_wkb` is the WKB that `block` was
+    decoded from, emitted as the row's geometry. A `block_complexity`
+    failure raises."""
     # kernel-side PIP refine of the cell-join candidates (closed semantics,
     # vectorized over all candidate points at once)
     mask = G.points_in_polygon_bulk(xs, ys, block)
@@ -41,14 +45,15 @@ def _k_row(block_id: str, block: G.Geom, xs: np.ndarray, ys: np.ndarray) -> tupl
     cents = np.column_stack([xs[mask], ys[mask]])
     ring = block.data[0] if block.kind == G.POLYGON else block.data[0][0]
     k = P.block_complexity(ring, cents)
-    return (block_id, G.wkb_dumps(block), int(k), G.wkb_dumps(G.multipoint(cents)))
+    return (block_id, block_wkb, int(k), G.wkb_dumps(G.multipoint(cents)))
 
 
 def _k_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     """The staged operator's per-block kernel: a failed block yields no row."""
-    block = G.wkb_loads(bytes(pdf["block_geom"].iloc[0]))
+    block_wkb = bytes(pdf["block_geom"].iloc[0])
+    block = G.wkb_loads(block_wkb)
     try:
-        row = _k_row(pdf["block_id"].iloc[0], block, pdf["x"].to_numpy(dtype=float),
+        row = _k_row(pdf["block_id"].iloc[0], block_wkb, block, pdf["x"].to_numpy(dtype=float),
                      pdf["y"].to_numpy(dtype=float))
     except Exception:
         row = None

@@ -11,7 +11,7 @@ nothing done and one group per region, and projects its stage-tagged table:
     lines     (one row per cover cell)       ─┐
     buildings (centroid cell, no footprint)  ─┤ ⋈cell broadcast(region covers)
     ∪ one row per region
-    → ONE shuffle on gadm → ONE applyInPandas kernel per region
+    → ONE shuffle on gadm → ONE applyInArrow kernel per region
       (pipeline._make_region_kernel): polygonize streets → bbox prefilter +
       bulk PIP of the centroids per block → complexity._k_row per block
     → ONE filter + select: the complexity rows, plus (keep_status=True) the

@@ -8,10 +8,13 @@ per stage. Plan shape:
 
     street lines  (one row per cover cell)      ─┐
     buildings     (centroid cell [+ footprint]) ─┤ ⋈cell broadcast(region covers)
+      (the centroid is an Arrow UDF decoding the WKB buffers directly)
     ∪ one row per region (its geometry, so a region no street or building
       reaches still forms a group)
-    → ONE shuffle on gadm → applyInPandas per region, calling the staged
-      operators' own per-group kernels in order:
+    → ONE shuffle on gadm → applyInArrow per region (the kernel reads the
+      group's `pa.Table` into numpy once and returns a `pa.Table`), calling
+      the staged operators' own per-group kernels, which keep their pandas
+      interfaces, in order:
         blocks._blocks_kernel → per-block bbox prefilter + points_in_polygon_bulk
         → parcels._parcels_kernel_impl → complexity._k_row →
         reblock_op._make_reblock_kernel
@@ -50,6 +53,8 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,6 +101,9 @@ for _ddl in _STAGE_SCHEMAS.values():
     _FIELDS += [f for f in _fields(_ddl) if f not in _FIELDS]
 _SCHEMA = ", ".join(f"{n} {t}" for n, t in _FIELDS)
 _COLS = [n for n, _ in _FIELDS]
+_ARROW_TYPES = {"string": pa.string(), "binary": pa.binary(), "long": pa.int64(),
+                "int": pa.int32(), "double": pa.float64()}
+_ARROW_SCHEMA = pa.schema([(n, _ARROW_TYPES[t]) for n, t in _FIELDS])
 
 
 class _Emitter:
@@ -118,8 +126,8 @@ class _Emitter:
         self.rows[stage] += rows
         self.ledger.append((stage, key, status, len(rows), ms))
 
-    def frame(self) -> pd.DataFrame:
-        """All rows as one `_SCHEMA` frame, built column by column."""
+    def frame(self) -> pa.Table:
+        """All rows as one `_SCHEMA` Arrow table, built column by column."""
         cols: dict = {c: [] for c in _COLS}
         groups = [(s, _STAGE_COLS[s], rows) for s, rows in self.rows.items()]
         for tag, names, rows in groups + [("ledger", _LEDGER_COLS, self.ledger)]:
@@ -127,7 +135,10 @@ class _Emitter:
             cols["tag"] += [tag] * len(rows)
             for c in _COLS[1:]:
                 cols[c] += values.get(c, [None] * len(rows))
-        return pd.DataFrame(cols)
+        return pa.table(
+            [pa.array(cols[f.name], f.type, from_pandas=True) for f in _ARROW_SCHEMA],
+            schema=_ARROW_SCHEMA,
+        )
 
 
 def _tuples(df: pd.DataFrame, stage: str) -> list:
@@ -154,14 +165,19 @@ def _make_region_kernel(done: frozenset, stages: tuple, shards: int):
         RB._make_reblock_kernel(False, False, False, 0, False) if "reblock" in stages else None
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        gadm = pdf["gadm"].iloc[0]
-        shard = int(pdf["shard"].iloc[0]) if shards > 1 else 0
+    def kernel(table):
+        """One group's rows (a `pa.Table`) → its `_SCHEMA` table. Each row
+        kind's columns are read into numpy once; the kind masks come from
+        `pyarrow.compute`, so no Python string is made per row."""
+        gadm = table["gadm"][0].as_py()
+        shard = table["shard"][0].as_py() if shards > 1 else 0
         out = _Emitter(done)
-        kind = pdf["kind"].to_numpy()
-        payload = pdf["payload"].to_numpy()
-        region_geom = bytes(payload[kind == "R"][0])
-        lines = payload[kind == "L"]
+
+        def of_kind(kind: str) -> pa.Table:
+            return table.filter(pc.equal(table["kind"], kind))
+
+        region_geom = of_kind("R")["payload"][0].as_py()
+        lines = of_kind("L")["payload"].to_numpy(zero_copy_only=False)
 
         t0 = time.perf_counter()
         if len(lines):
@@ -179,9 +195,10 @@ def _make_region_kernel(done: frozenset, stages: tuple, shards: int):
         if shard == 0:
             out.add("blocks", gadm, t0, _tuples(blocks, "blocks"))
 
-        b = kind == "B"
-        xs, ys = pdf["x"].to_numpy(dtype=float)[b], pdf["y"].to_numpy(dtype=float)[b]
-        osm_id, footprint = pdf["osm_id"].to_numpy()[b], payload[b]
+        bldgs = of_kind("B")
+        xs, ys = bldgs["x"].to_numpy(), bldgs["y"].to_numpy()
+        osm_id = bldgs["osm_id"].to_numpy(zero_copy_only=False)
+        footprint = bldgs["payload"].to_numpy(zero_copy_only=False)
         by_x = np.argsort(xs, kind="stable")
         sorted_x = xs[by_x]
 
@@ -215,7 +232,7 @@ def _make_region_kernel(done: frozenset, stages: tuple, shards: int):
             if "complexity" in want:
                 t0 = time.perf_counter()
                 try:
-                    row = CX._k_row(bid, block, xs[inside], ys[inside])
+                    row = CX._k_row(bid, bgeom, block, xs[inside], ys[inside])
                 except Exception as ex:
                     out.add("complexity", bid, t0, status=f"error:{type(ex).__name__}")
                 else:
@@ -279,8 +296,8 @@ def _region_pass(
     rows = probe.unionByName(region_p)
     if shards > 1:
         rows = rows.withColumn("shard", F.explode(F.sequence(F.lit(0), F.lit(shards - 1))))
-        return rows.groupBy("gadm", "shard").applyInPandas(kernel, _SCHEMA)
-    return rows.groupBy("gadm").applyInPandas(kernel, _SCHEMA)
+        return rows.groupBy("gadm", "shard").applyInArrow(kernel, _SCHEMA)
+    return rows.groupBy("gadm").applyInArrow(kernel, _SCHEMA)
 
 
 def _pending(led: Ledger, gadm: DataFrame, stages: tuple):

@@ -97,7 +97,12 @@ def test_fused_plan_and_job_count(spark, keep_status):
 
     # the adaptive plan prints its final plan before the initial one
     plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 0, plan
     assert plan.count("BroadcastExchange") == 1, plan
     # line covers, building centroids (once) and region covers
     assert plan.count("ArrowEvalPython") == 3, plan
+    # the centroid node alone is an Arrow UDF (eval type 250); the covers
+    # stay pandas UDFs (200)
+    evals = [ln.rsplit(", ", 1)[1] for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert sorted(evals) == ["200", "200", "250"], plan

@@ -320,39 +320,115 @@ def test_tolerated_member_kind_mismatch_matches_scalar():
     assert got == want and got.kind == G.MULTIPOINT
 
 
-def test_centroid_xy_cell_fast_path_bitwise(spark):
-    """Round-8: the grouped/stacked centroid fast path inside
-    st_centroid_xy_cell must match the per-row G.centroid loop BIT-for-bit
-    on synthetic buildings (boxes + multiparts) and on rings of many
-    lengths (pairwise-sum grouping must survive the stacking)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
+def _ring(n_pts: int, rng, c: float = 10.0) -> np.ndarray:
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n_pts))
+    rad = rng.uniform(0.5, 1.5, n_pts)
+    ring = np.stack([c + rad * np.cos(ang), c + rad * np.sin(ang)], axis=1)
+    return np.vstack([ring, ring[:1]])
 
+
+def _square(x: float, y: float, d: float) -> np.ndarray:
+    return np.asarray([(x, y), (x + d, y), (x + d, y + d), (x, y + d), (x, y)])
+
+
+def _centroid_rows() -> list:
+    """(id, WKB | None) rows covering every path of geom.wkb_centroids:
+    fixture buildings (boxes + multiparts), irregular rings of many
+    lengths (pairwise summation unrolls past 8 terms), and the edge cases
+    below."""
     from prclz_spark import fixtures as FX
-    from prclz_spark.functions.st import st_centroid_xy_cell
 
     pdf = FX.make_buildings(8, 8, per_cell=24)
-    # add irregular rings of several lengths (incl. >8 edges: pairwise
-    # summation kicks into its unrolled mode there)
+    rows = [(r.osm_id, bytes(r.geometry)) for r in pdf.itertuples()]
     rng = np.random.default_rng(7)
-    extra = []
     for n_pts in (3, 5, 9, 17, 40, 130):
         for t in range(8):
-            ang = np.sort(rng.uniform(0, 2 * np.pi, n_pts))
-            rad = rng.uniform(0.5, 1.5, n_pts)
-            ring = np.stack([10 + rad * np.cos(ang), 10 + rad * np.sin(ang)], axis=1)
-            extra.append((f"x{n_pts}_{t}", "house", None,
-                          G.wkb_dumps(G.polygon([tuple(p) for p in ring]))))
-    pdf = pd.concat([pdf, pd.DataFrame(extra, columns=pdf.columns)])
-    sdf = spark.createDataFrame(pdf[["osm_id", "geometry"]])
+            rows.append((f"x{n_pts}_{t}", G.wkb_dumps(G.Geom(G.POLYGON, [_ring(n_pts, rng)]))))
+    flat = np.asarray([(1.0, 1.0), (2.0, 2.0), (3.0, 3.0), (1.0, 1.0)])
+    gc = G.wkb_dumps(G.Geom(G.POLYGON, [_square(5, 5, 2)]))
+    edge = {
+        "hole": G.Geom(G.POLYGON, [_square(0, 0, 4), _square(1, 1, 1)[::-1]]),
+        "three_parts": G.multipolygon(
+            [[_square(0, 0, 1)], [_square(3, 0, 2), _square(3.5, 0.5, 0.5)], [_ring(11, rng)]]
+        ),
+        "zero_area_hole": G.Geom(G.POLYGON, [_square(0, 0, 3), flat]),
+        "all_zero_area": G.Geom(G.POLYGON, [flat]),
+        # equal byte length (2 rings, 15 points), different ring sizes
+        "layout_a": G.Geom(G.POLYGON, [_ring(4, rng, 20.0), _ring(9, rng, 20.0)]),
+        "layout_b": G.Geom(G.POLYGON, [_ring(6, rng, 30.0), _ring(7, rng, 30.0)]),
+    }
+    rows += [(k, G.wkb_dumps(g)) for k, g in edge.items()]
+    rows += [("null", None), ("collection", b"\x01" + struct.pack("<II", 7, 1) + gc)]
+    return rows
+
+
+def _big_endian_square() -> bytes:
+    ring = _square(0, 0, 1)
+    return b"\x00" + struct.pack(">III", G.POLYGON, 1, len(ring)) + ring.astype(">f8").tobytes()
+
+
+def _binary_column(bufs: list) -> tuple:
+    lens = [0 if b is None else len(b) for b in bufs]
+    offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+    data = np.frombuffer(b"".join(b for b in bufs if b is not None), np.uint8)
+    return data, offsets, np.asarray([b is not None for b in bufs])
+
+
+def test_wkb_centroids_bitwise(monkeypatch):
+    """geom.wkb_centroids equals G.centroid(G.wkb_loads(b)) bit for bit on
+    every row, and only the rows with no shared canonical layout (a
+    collection, the second layout of one byte length, an all-zero-area
+    polygon) take the scalar path."""
+    rows = _centroid_rows()
+    bufs = [b for _, b in rows]
+    assert len(bufs[-4]) == len(bufs[-3])  # layout_a / layout_b
+    want = np.asarray([G.centroid(G.wkb_loads(b)) if b else (np.nan, np.nan) for b in bufs])
+    scalar = []
+    real = G.centroid
+    monkeypatch.setattr(G, "centroid", lambda g: scalar.append(g.kind) or real(g))
+    got = G.wkb_centroids(*_binary_column(bufs))
+    assert np.array_equal(got, want, equal_nan=True)
+    assert sorted(scalar) == [G.POLYGON, G.POLYGON, G.MULTIPOLYGON], scalar
+    # the same column as a sliced Arrow array (nonzero offset), as the UDF reads it
+    import pyarrow as pa
+
+    from prclz_spark.functions.st import _binary_buffers
+
+    for typ in (pa.binary(), pa.large_binary()):
+        sliced = G.wkb_centroids(*_binary_buffers(pa.array(bufs, typ)[5:]))
+        assert np.array_equal(sliced, want[5:], equal_nan=True)
+    # a big-endian row takes the scalar decoder, which rejects it
+    with pytest.raises(AssertionError, match="big-endian"):
+        G.wkb_centroids(*_binary_column(bufs[:3] + [_big_endian_square()]))
+
+
+def test_centroid_xy_cell_fast_path_bitwise(spark):
+    """st_centroid_xy_cell (an Arrow UDF over geom.wkb_centroids) matches
+    the per-row G.centroid loop BIT-for-bit on the rows of
+    `_centroid_rows`; a null geometry gives null x, y and cell, and a
+    big-endian row fails as the scalar decoder does."""
+    from pyspark.sql import functions as F
+
+    from prclz_spark import cells as C
+    from prclz_spark.functions.st import st_centroid_xy_cell
+
+    rows = _centroid_rows()
+    sdf = spark.createDataFrame(rows, "osm_id string, geometry binary").repartition(3)
     out = (
         sdf.withColumn("_c", st_centroid_xy_cell(14)(F.col("geometry")))
         .select("osm_id", "_c.x", "_c.y", "_c.cell")
-        .toPandas()
-        .set_index("osm_id")
+        .collect()
     )
-    for r in pdf.itertuples():
-        want = G.centroid(G.wkb_loads(bytes(r.geometry)))
-        got = out.loc[r.osm_id]
-        assert got["x"] == want[0] and got["y"] == want[1], r.osm_id
+    got = {r.osm_id: r for r in out}
+    assert len(got) == len(rows)
+    for osm_id, b in rows:
+        r = got[osm_id]
+        if b is None:
+            assert (r.x, r.y, r.cell) == (None, None, None)
+            continue
+        want = G.centroid(G.wkb_loads(b))
+        assert r.x == want[0] and r.y == want[1], osm_id
+        assert r.cell == int(C.cell_of_xy(want[0], want[1], 14)[0]), osm_id
+    bad = spark.createDataFrame([("be", _big_endian_square())], "osm_id string, geometry binary")
+    with pytest.raises(Exception, match="big-endian"):
+        bad.select(st_centroid_xy_cell(14)(F.col("geometry")).alias("c")).collect()

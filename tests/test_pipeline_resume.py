@@ -241,7 +241,10 @@ def test_failed_k_is_a_ledger_error(monkeypatch):
         + [("B", _poly([[x - .1, y - .1], [x + .1, y - .1], [x + .1, y + .1], [x - .1, y + .1],
                         [x - .1, y - .1]]), f"b{i}", x, y) for i, (x, y) in enumerate(pts)]
     )
-    pdf = pd.DataFrame(rows, columns=["kind", "payload", "osm_id", "x", "y"]).assign(gadm="R1")
+    table = pa.Table.from_pandas(
+        pd.DataFrame(rows, columns=["kind", "payload", "osm_id", "x", "y"]).assign(gadm="R1"),
+        preserve_index=False,
+    )
 
     real = P.block_complexity
 
@@ -251,7 +254,7 @@ def test_failed_k_is_a_ledger_error(monkeypatch):
         return real(ring, cents)
 
     monkeypatch.setattr(P, "block_complexity", poisoned)
-    out = _make_region_kernel(frozenset(), STAGES[:3], 1)(pdf)
+    out = _make_region_kernel(frozenset(), STAGES[:3], 1)(table).to_pandas()
 
     blocks = out[out.tag == "blocks"]
     assert len(blocks) == 4

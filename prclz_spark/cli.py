@@ -634,7 +634,7 @@ def main(argv=None):
                 # from any batch collide correctly) and append them
                 # exactly-once to an iceberg-lite codes table, seeded from
                 # the build's static snapshot on first use. Same watermark
-                # machinery as the ingest sinks: a replayed --batch-id is
+                # machinery as the ingest sink: a replayed --batch-id is
                 # a no-op, so a crashed orchestrator just re-runs.
                 from .sources import iceberg_lite as IL
 

@@ -1,7 +1,5 @@
-"""Text-corpus curation: one exactly-once batch step, shared by the
-`curate-text` CLI (daily driver) and the streaming foreachBatch sink
-(continuous crawl) — ONE implementation of the commit protocol, so the
-stream and the daily loop are the same pipeline by construction.
+"""Text- and image-corpus curation: one exactly-once batch step each, run
+by the `curate-text` / `curate-images-batch` CLI commands (the daily driver).
 
 Per batch: tiered dedup (each tier against its persisted fingerprint
 corpus) → incremental boilerplate line strip → Gopher quality filter →
@@ -90,8 +88,8 @@ def curate_text_batch(
         return None  # full replay — every commit already landed
 
     # Per-batch caches are handed back and unpersisted before returning:
-    # the streaming sink runs this every micro-batch for the life of the
-    # stream, and un-released caches would pile up in the cache manager.
+    # a long-lived session runs this once per batch, and un-released
+    # caches would pile up in the cache manager.
     caches = []
     try:
         return _curate_text_batch_inner(
@@ -210,41 +208,6 @@ def _curate_text_batch_inner(
     }
 
 
-def curate_text_stream_sink(
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id: str = "curate-text-stream",
-    on_batch=None,
-    **kwargs,
-):
-    """``foreachBatch`` callable running the curation step per micro-batch
-    — the continuous-crawl form of the `curate-text` CLI::
-
-        fn = curate_text_stream_sink(table, quality_rules=dict(GOPHER_RULES))
-        stream.writeStream.foreachBatch(fn) \
-              .option("checkpointLocation", ckpt).start()
-
-    Structured Streaming's foreachBatch is at-least-once; the batch step's
-    {query_id, batch_id} watermarks make the composition exactly-once —
-    a crash-replayed micro-batch recomputes byte-identical verdicts
-    (fingerprint corpora are read as of before its own first attempt) and
-    lands only the commits that are still missing. ``on_batch(stats,
-    batch_id)`` fires for fresh batches (not full replays). Keyword args
-    pass through to :func:`curate_text_batch` (tiers, min_df,
-    quality_rules, mix/mix_tokens, seed, ...)."""
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        stats = curate_text_batch(
-            df, table, batch_id, id_col=id_col, text_col=text_col,
-            query_id=query_id, **kwargs,
-        )
-        if on_batch is not None and stats is not None:
-            on_batch(stats, batch_id)
-
-    return sink
-
-
 def curate_images_batch(
     batch: DataFrame,
     table: str,
@@ -348,24 +311,3 @@ def curate_images_batch(
     finally:
         for c in caches:
             c.unpersist()
-
-
-def curate_images_stream_sink(
-    table: str,
-    id_col: str = "image_id",
-    query_id: str = "curate-images-stream",
-    on_batch=None,
-    **kwargs,
-):
-    """``foreachBatch`` callable for a continuous image crawl — the
-    streaming form of :func:`curate_images_batch`, exactly-once via the
-    same {query_id, batch_id} watermarks (see curate_text_stream_sink)."""
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        stats = curate_images_batch(
-            df, table, batch_id, id_col=id_col, query_id=query_id, **kwargs
-        )
-        if on_batch is not None and stats is not None:
-            on_batch(stats, batch_id)
-
-    return sink

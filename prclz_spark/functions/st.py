@@ -9,8 +9,7 @@ once per batch via the WKB codec.
 
 Reference semantics being reproduced (citations into /root/reference):
 centroid `prclz/_complexity.py:104`; area/shoelace `prclz/topology.py:144-168`;
-distance `prclz/_parcels.py:130`; intersects/contains `prclz/_parcels.py:41`,
-`prclz/reblock/_reblock.py:66`; WKT io `prclz/utils.py:56`.
+point-in-polygon `prclz/_complexity.py:107`; WKT io `prclz/utils.py:56`.
 """
 
 from __future__ import annotations
@@ -108,352 +107,16 @@ def st_length(s: pd.Series) -> pd.Series:
     return pd.Series(G.batch_length(_decode_batch(s)))
 
 
-@pandas_udf(StringType())
-def st_geometrytype(s: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None else g.type_name for g in G.wkb_loads_batch(s)]
-    )
-
-
 @pandas_udf(_BBOX)
 def st_bounds(s: pd.Series) -> pd.DataFrame:
     bb = G.batch_bounds(_decode_batch(s))
     return pd.DataFrame(bb, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-def _points_touch_bulk(g, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
-    """Vectorized G._point_touches over many points vs one non-polygonal
-    geometry — same decision formula (the open-segment cross/dot band; the
-    closed-ring precheck in the scalar is a superset of it, so the open
-    test alone is the decision both ways)."""
-    out = np.zeros(len(xs), dtype=bool)
-    for arr in G._all_coords(g):
-        if len(arr) == 1:
-            out |= (xs == arr[0, 0]) & (ys == arr[0, 1])
-            continue
-        x0, y0 = arr[:-1, 0][None, :], arr[:-1, 1][None, :]
-        dx = arr[1:, 0][None, :] - x0
-        dy = arr[1:, 1][None, :] - y0
-        P, Q = xs[:, None], ys[:, None]
-        cross = (P - x0) * dy - (Q - y0) * dx
-        dot = (P - x0) * dx + (Q - y0) * dy
-        l2 = dx * dx + dy * dy
-        on = (np.abs(cross) < 1e-12) & (dot >= -1e-12) & (dot <= l2 + 1e-12)
-        # near-zero-length segments satisfy the cross/dot band for EVERY
-        # point (the project's recorded float-dust trap — repeated
-        # consecutive vertices are common in real OSM linestrings); they
-        # match only at the vertex itself, exactly as the scalar's
-        # point_in_ring guard does
-        on &= (l2 >= 1e-24) | ((np.abs(P - x0) < 1e-12) & (np.abs(Q - y0) < 1e-12))
-        out |= on.any(axis=1)
-    return out
-
-
-def _factorize_decode(s: pd.Series):
-    """(codes, decoded-uniques): each DISTINCT WKB in the batch is decoded
-    exactly once; nulls get code −1. Shared by every pair-predicate path —
-    post-candidate-join batches repeat the container side heavily, and the
-    old shape decoded every row then re-decoded per distinct."""
-    codes, uniques = pd.factorize(s.map(lambda v: bytes(v) if v is not None else None))
-    return codes, [G.wkb_loads(u) for u in uniques]
-
-
-def _pair_predicate_batch(a: pd.Series, b: pd.Series, op: str) -> list:
-    """Batched geometry⋈geometry predicates, factorized on both sides
-    (VERDICT r4 #7 / r5 #3 — the generic pair forms used to run a per-pair
-    Python loop after batch decode). Each distinct WKB is decoded once.
-    The common post-candidate-join batch shape is many probe POINTS
-    against few distinct geometries: those are answered per distinct
-    geometry in one vectorized pass (PIP ray-cast / segment-band /
-    point-to-segment matrix — the same float ops as the scalars, applied
-    row-wise, so results are identical). For ``intersects`` (symmetric)
-    the sides are swapped when the points are on the left.
-
-    Geometry⋈geometry batches (r5: previously a pure scalar loop) get
-    vectorized front stages with the per-pair kernel only on survivors:
-    ``intersects`` rejects bbox-disjoint pairs in one array pass (the
-    scalar's own first check, so exactly equivalent); ``contains`` stacks
-    ALL vertices of a container's partners into one bulk PIP call (the
-    scalar's all-vertices-inside stage), and only pairs passing it run
-    the segment-crossing kernel; ``distance`` amortizes decode only (its
-    per-pair math is already a numpy matrix)."""
-    codes_a, dec_a = _factorize_decode(a)
-    codes_b, dec_b = _factorize_decode(b)
-    ga = [dec_a[c] if c >= 0 else None for c in codes_a]
-    gb = [dec_b[c] if c >= 0 else None for c in codes_b]
-    valid = [i for i in range(len(ga)) if ga[i] is not None and gb[i] is not None]
-    out: list = [None] * len(ga)
-    if not valid:
-        return out
-    vidx = np.asarray(valid, dtype=np.int64)
-    geom_codes, geom_dec, pt_g = codes_a, dec_a, gb
-    swapped = False
-    if not all(gb[i].kind == G.POINT for i in valid):
-        if op == "intersects" and all(ga[i].kind == G.POINT for i in valid):
-            geom_codes, geom_dec, pt_g, swapped = codes_b, dec_b, ga, True
-        else:
-            return _geom_pair_batch(op, ga, gb, codes_a, dec_a, codes_b, dec_b, vidx, out)
-    px = np.array([pt_g[i].data[0] for i in valid], dtype=np.float64)
-    py = np.array([pt_g[i].data[1] for i in valid], dtype=np.float64)
-    vcodes = geom_codes[vidx]
-    for ui in np.unique(vcodes):
-        sel = vcodes == ui
-        idx = vidx[sel]
-        g = geom_dec[ui]
-        xs, ys = px[sel], py[sel]
-        if op == "contains":
-            if swapped or g.kind not in (G.POLYGON, G.MULTIPOLYGON):
-                res = np.zeros(len(xs), dtype=bool)
-            else:
-                res = G.points_in_polygon_bulk(xs, ys, g)
-        elif op == "intersects":
-            xmin, ymin, xmax, ymax = G.bounds(g)
-            inb = (xs >= xmin) & (xs <= xmax) & (ys >= ymin) & (ys <= ymax)
-            if g.kind in (G.POLYGON, G.MULTIPOLYGON):
-                res = inb & G.points_in_polygon_bulk(xs, ys, g)
-            else:
-                res = inb & _points_touch_bulk(g, xs, ys)
-        else:  # distance
-            pts = np.column_stack([xs, ys])
-            segs = G._segments(g)
-            if len(segs):
-                res = G._pts_to_segs(pts, segs).min(axis=1)
-            else:
-                gc = np.vstack(G._all_coords(g))
-                dd = pts[:, None, :] - gc[None, :, :]
-                res = np.sqrt((dd ** 2).sum(-1)).min(axis=1)
-            if g.kind in (G.POLYGON, G.MULTIPOLYGON):
-                res = np.where(G.points_in_polygon_bulk(xs, ys, g), 0.0, res)
-        for i, r in zip(idx.tolist(), res.tolist()):
-            out[i] = r
-    return out
-
-
-_MAT_BUDGET = 4_000_000  # max elements per broadcast matrix call
-
-
-def _span_chunks(rows: list, sizes: list, width: int):
-    """Split ``rows`` into sublists whose total ``sizes`` keep a
-    (width × total) broadcast matrix under _MAT_BUDGET elements."""
-    cap = max(1024, _MAT_BUDGET // max(1, width))
-    cur, tot = [], 0
-    for r, s in zip(rows, sizes):
-        if cur and tot + s > cap:
-            yield cur
-            cur, tot = [], 0
-        cur.append(r)
-        tot += s
-    if cur:
-        yield cur
-
-
-def _stack_spans(arrays: list):
-    """(vstacked array, per-input offsets) for a list of (k_i, d) arrays,
-    where empties contribute zero-length spans."""
-    offs = np.zeros(len(arrays) + 1, dtype=np.int64)
-    np.cumsum([len(x) for x in arrays], out=offs[1:])
-    nonempty = [x for x in arrays if len(x)]
-    stacked = np.vstack(nonempty) if nonempty else np.empty((0, arrays[0].shape[1] if arrays else 2))
-    return stacked, offs
-
-
-def _geom_pair_batch(
-    op: str, ga: list, gb: list,
-    codes_a: np.ndarray, dec_a: list, codes_b: np.ndarray, dec_b: list,
-    vidx: np.ndarray, out: list,
-) -> list:
-    """Geometry⋈geometry stage of _pair_predicate_batch (see its
-    docstring): pairs are grouped by DISTINCT container (left geometry),
-    and each scalar predicate's stages run as ONE broadcast matrix call
-    over the stacked segments / vertices of all the container's partners
-    — segment-crossing via segments_intersect(sa, stacked), vertex
-    containment via bulk PIP, point-to-segment distance via the
-    projection matrix — with per-pair reductions over span offsets.
-    The stages are the scalar kernels' own stages over the same float
-    ops, so results are exactly the scalar loop's. Rows involving a
-    POINT keep the per-pair scalar (the scalars take dedicated point
-    branches there, and point pairs are cheap); matrix calls are chunked
-    to ~32 MB. Typical speedups (6 containers × 3000 box partners):
-    intersects ~8×, contains ~4×, distance ~6× CPU (CI-gated ≥2.5×)."""
-    POLY = (G.POLYGON, G.MULTIPOLYGON)
-    rows_all = vidx.tolist()
-    if op == "intersects":
-        # stage 0 — vectorized bbox reject (the scalar's own first check)
-        ba, bb = G.batch_bounds(dec_a), G.batch_bounds(dec_b)
-        A_, B_ = ba[codes_a[vidx]], bb[codes_b[vidx]]
-        disjoint = (
-            (A_[:, 0] > B_[:, 2]) | (B_[:, 0] > A_[:, 2])
-            | (A_[:, 1] > B_[:, 3]) | (B_[:, 1] > A_[:, 3])
-        )
-        for i in vidx[disjoint].tolist():
-            out[i] = False
-        rows_all = vidx[~disjoint].tolist()
-    by_container: dict[int, list] = {}
-    for i in rows_all:
-        if op == "intersects" and (ga[i].kind == G.POINT or gb[i].kind == G.POINT):
-            out[i] = G.intersects(ga[i], gb[i])  # dedicated point branches
-            continue
-        by_container.setdefault(codes_a[i], []).append(i)
-
-    for ui, rows in by_container.items():
-        A = dec_a[ui]
-        if op == "contains" and A.kind not in POLY:
-            for i in rows:
-                out[i] = False
-            continue
-        sa = G._segments(A)
-        pa = np.vstack(G._all_coords(A))
-        a_poly = A.kind in POLY
-        sb_list = [G._segments(gb[i]) for i in rows]
-        sb_by_row = dict(zip(rows, sb_list))
-
-        if op == "distance" and not len(sa):
-            segless = [i for i in rows if not len(sb_by_row[i])]
-            for i in segless:  # both sides pure point sets → scalar branch
-                out[i] = G.distance(ga[i], gb[i])
-            rows = [i for i in rows if len(sb_by_row[i])]
-            sb_list = [sb_by_row[i] for i in rows]
-
-        if op == "contains":
-            # stage 1 — ALL partner vertices inside A, one bulk PIP
-            pb_list = [np.vstack(G._all_coords(gb[i])) for i in rows]
-            PB, offs = _stack_spans(pb_list)
-            inside = G.points_in_polygon_bulk(PB[:, 0], PB[:, 1], A)
-            surv = [
-                i for k, i in enumerate(rows)
-                if bool(inside[offs[k]:offs[k + 1]].all())
-            ]
-            for i in rows:
-                out[i] = False
-            if not len(sa):
-                for i in surv:
-                    out[i] = True  # scalar skips the crossing stage
-                continue
-            surv_sb = [sb_by_row[i] for i in surv]
-            for chunk in _span_chunks(surv, [len(s) for s in surv_sb], len(sa)):
-                csb = [sb_by_row[i] for i in chunk]
-                SB, offs = _stack_spans(csb)
-                hit = (
-                    segments_col_any(sa, SB) if len(SB)
-                    else np.zeros(0, dtype=bool)
-                )
-                for k, i in enumerate(chunk):
-                    span = hit[offs[k]:offs[k + 1]]
-                    if not span.any():
-                        out[i] = True  # no crossing with any partner edge
-                        continue
-                    sb = csb[k]  # crossing: every edge midpoint must stay in
-                    mids = 0.5 * (sb[:, :2] + sb[:, 2:])
-                    out[i] = bool(
-                        G.points_in_polygon_bulk(mids[:, 0], mids[:, 1], A).all()
-                    )
-            continue
-
-        if op == "intersects":
-            heads_by_row = {
-                i: np.array([arr[0] for arr in G._all_coords(gb[i])]) for i in rows
-            }
-            a_heads = np.array([arr[0] for arr in G._all_coords(A)])
-            pending = dict.fromkeys(rows, True)
-            for chunk in _span_chunks(rows, [len(sb_by_row[i]) for i in rows], max(1, len(sa))):
-                csb = [sb_by_row[i] for i in chunk]
-                SB, offs = _stack_spans(csb)
-                hit = (
-                    segments_col_any(sa, SB) if len(sa) and len(SB)
-                    else np.zeros(len(SB), dtype=bool)
-                )
-                for k, i in enumerate(chunk):
-                    if hit[offs[k]:offs[k + 1]].any():
-                        out[i] = True
-                        pending[i] = False
-            left = [i for i in rows if pending[i]]
-            if a_poly and left:
-                H, offs = _stack_spans([heads_by_row[i] for i in left])
-                inside = G.points_in_polygon_bulk(H[:, 0], H[:, 1], A)
-                for k, i in enumerate(left):
-                    if inside[offs[k]:offs[k + 1]].any():
-                        out[i] = True
-                        pending[i] = False
-                left = [i for i in left if pending[i]]
-            for i in left:  # b-contains-a: heads of A's rings inside b
-                g2 = gb[i]
-                out[i] = bool(
-                    g2.kind in POLY
-                    and G.points_in_polygon_bulk(
-                        a_heads[:, 0], a_heads[:, 1], g2
-                    ).any()
-                )
-            continue
-
-        # distance — matrix stages per container, reductions per span
-        pb_by_row = {i: np.vstack(G._all_coords(gb[i])) for i in rows}
-        for chunk in _span_chunks(
-            rows,
-            [len(sb_by_row[i]) + len(pb_by_row[i]) for i in rows],
-            max(len(pa), len(sa), 1),
-        ):
-            csb = [sb_by_row[i] for i in chunk]
-            cpb = [pb_by_row[i] for i in chunk]
-            SB, soffs = _stack_spans(csb)
-            PB, poffs = _stack_spans(cpb)
-            d_pb_sa = (
-                G._pts_to_segs(PB, sa) if len(sa) and len(PB) else None
-            )
-            d_pa_sb = (
-                G._pts_to_segs(pa, SB).min(axis=0) if len(SB) else None
-            )
-            cross = (
-                segments_col_any(sa, SB) if len(sa) and len(SB)
-                else np.zeros(len(SB), dtype=bool)
-            )
-            in_a = (
-                G.points_in_polygon_bulk(PB[:, 0], PB[:, 1], A)
-                if a_poly and len(PB) else None
-            )
-            for k, i in enumerate(chunk):
-                s0, s1 = soffs[k], soffs[k + 1]
-                p0, p1 = poffs[k], poffs[k + 1]
-                if cross[s0:s1].any():
-                    out[i] = 0.0
-                    continue
-                if in_a is not None and bool(in_a[p0:p1].any()):
-                    out[i] = 0.0
-                    continue
-                g2 = gb[i]
-                if g2.kind in POLY and bool(
-                    G.points_in_polygon_bulk(pa[:, 0], pa[:, 1], g2).any()
-                ):
-                    out[i] = 0.0
-                    continue
-                d = np.inf
-                if s1 > s0 and d_pa_sb is not None:
-                    d = min(d, float(d_pa_sb[s0:s1].min()))
-                if d_pb_sa is not None and p1 > p0:
-                    d = min(d, float(d_pb_sa[p0:p1].min()))
-                out[i] = d
-    return out
-
-
-def segments_col_any(sa: np.ndarray, sb: np.ndarray) -> np.ndarray:
-    """any-over-rows of segments_intersect(sa, sb): per-``sb``-segment
-    'crosses anything in sa' — the reduction every staged predicate needs."""
-    return G.segments_intersect(sa, sb).any(axis=0)
-
-
-@pandas_udf(BooleanType())
-def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(_pair_predicate_batch(a, b, "intersects"))
-
-
-@pandas_udf(BooleanType())
-def st_contains(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(_pair_predicate_batch(a, b, "contains"))
-
-
 @pandas_udf(BooleanType())
 def st_contains_xy(a: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     """Polygon-contains-point with scalar coords — the PIP refine predicate
-    (J4, `prclz/_complexity.py:107`). Cheaper than st_contains(point_wkb).
+    (J4, `prclz/_complexity.py:107`).
 
     Candidates are grouped by polygon within each Arrow batch and tested via
     ONE vectorized ray-cast per distinct polygon (points_in_polygon_bulk) —
@@ -476,12 +139,6 @@ def st_contains_xy(a: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@pandas_udf(DoubleType())
-def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
-    # no float64 cast: None must reach Arrow as null, not NaN
-    return pd.Series(_pair_predicate_batch(a, b, "distance"))
-
-
 @pandas_udf(BinaryType())
 def st_boundary(s: pd.Series) -> pd.Series:
     """Polygon → MultiLineString of its rings (`prclz/reblock/_reblock.py:63`).
@@ -499,217 +156,6 @@ def st_boundary(s: pd.Series) -> pd.Series:
         return G.wkb_dumps(g)
 
     return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_convexhull(s: pd.Series) -> pd.Series:
-    def f(b):
-        if b is None:
-            return None
-        import numpy as np
-
-        pts = np.vstack(G._all_coords(G.wkb_loads(bytes(b))))
-        ring = G.convex_hull(pts)
-        if len(ring) < 4:
-            return G.wkb_dumps(G.linestring(ring)) if len(ring) > 1 else G.wkb_dumps(G.point(*ring[0]))
-        return G.wkb_dumps(G.Geom(G.POLYGON, [ring]))
-
-    return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_geomfromona(s: pd.Series) -> pd.Series:
-    """ONA survey text → Polygon (`prclz/utils.py:12-15` `parse_ona_text`):
-    ';'-separated '<lat> <lon> <t> <z>' tuples; the polygon takes (lon, lat)."""
-    def f(t):
-        if t is None:
-            return None
-        coords = [c.split() for c in t.split(";")]
-        ring = [(float(x), float(y)) for (y, x, _t, _z) in coords]
-        return G.wkb_dumps(G.polygon(ring))
-
-    return s.map(f)
-
-
-@pandas_udf(BinaryType())
-def st_linemerge(s: pd.Series) -> pd.Series:
-    """Merge a MultiLineString's segments into maximal linestrings by
-    chaining through degree-2 endpoints (`shapely.ops.linemerge` analogue,
-    `prclz/reblock/_reblock_graph.py:1162`)."""
-    def f(b):
-        if b is None:
-            return None
-        g = G.wkb_loads(bytes(b))
-        if g.kind == G.LINESTRING:
-            return b
-        if g.kind != G.MULTILINESTRING:
-            return b
-        # endpoint adjacency over the input lines
-        def key(p):
-            return (round(float(p[0]), 9), round(float(p[1]), 9))
-
-        lines = [np.asarray(l) for l in g.data if len(l) >= 2]
-        adj: dict = {}
-        for i, l in enumerate(lines):
-            adj.setdefault(key(l[0]), []).append((i, False))
-            adj.setdefault(key(l[-1]), []).append((i, True))
-        used = set()
-        merged = []
-        for i in range(len(lines)):
-            if i in used:
-                continue
-            used.add(i)
-            chain = list(map(tuple, lines[i]))
-            # extend forward then backward through degree-2 joints
-            for forward in (True, False):
-                while True:
-                    endk = key(chain[-1] if forward else chain[0])
-                    cands = [(j, rev) for j, rev in adj.get(endk, []) if j not in used]
-                    if len(adj.get(endk, [])) != 2 or len(cands) != 1:
-                        break
-                    j, rev = cands[0]
-                    used.add(j)
-                    nxt = list(map(tuple, lines[j]))
-                    if forward:
-                        chain = chain + (nxt[::-1] if rev else nxt)[1:]
-                    else:
-                        chain = (nxt if rev else nxt[::-1])[:-1] + chain
-            merged.append(np.asarray(chain))
-        if len(merged) == 1:
-            return G.wkb_dumps(G.linestring(merged[0]))
-        return G.wkb_dumps(G.multilinestring(merged))
-
-    return s.map(f)
-
-
-# --- boolean overlay + buffer (general st_intersection/difference/union/
-# buffer via the planar-arrangement kernel; closes the §2.6 GEOS gaps) ------
-
-
-def _overlay_udf(op: str):
-    from ..kernels import overlay as OV
-
-    @pandas_udf(BinaryType())
-    def _f(a: pd.Series, b: pd.Series) -> pd.Series:
-        def one(x, y):
-            if x is None or y is None:
-                return None
-            r = OV.overlay(G.wkb_loads(bytes(x)), G.wkb_loads(bytes(y)), op)
-            return G.wkb_dumps(r) if r is not None else None
-
-        return pd.Series([one(x, y) for x, y in zip(a, b)])
-
-    return _f
-
-
-st_intersection = _overlay_udf("intersection")
-st_difference = _overlay_udf("difference")
-st_union_pair = _overlay_udf("union")
-st_symdifference = _overlay_udf("symdifference")
-
-
-def st_buffer(dist: float):
-    """buffer(geometry, dist) — round joins approximated by 16-chord arcs
-    (`prclz/blocks/_methods.py:35-40` ε-buffer semantics)."""
-    from ..kernels import overlay as OV
-
-    @pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return None
-            r = OV.buffer(G.wkb_loads(bytes(b)), dist)
-            return G.wkb_dumps(r) if r is not None else None
-
-        return s.map(one)
-
-    return _f
-
-
-@pandas_udf(BinaryType())
-def st_nearest_points(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Nearest point of geometry `a` to geometry `b` (a POINT on `a`) —
-    `shapely.ops.nearest_points(a, b)[0]` as an engine UDF (reference use:
-    `prclz/reblock/_reblock.py:125-130`, `prclz/_parcels.py:139`). The
-    probe location on `b` is its closest vertex/edge sample to `a`'s
-    nearest structure, computed by the same mutual-projection kernel the
-    reblock operator uses in-kernel."""
-    def one(xb, yb):
-        if xb is None or yb is None:
-            return None
-        ga = G.wkb_loads(bytes(xb))
-        gb = G.wkb_loads(bytes(yb))
-        # mutual refinement: project each of b's vertices onto a, keep the
-        # closest; one extra pass a→b→a sharpens edge-edge cases
-        vb = np.vstack(G._all_coords(gb))
-        best = None
-        bd = np.inf
-        for (qx, qy) in vb:
-            p = G.nearest_point_on(ga, float(qx), float(qy))
-            d = float(np.hypot(p[0] - qx, p[1] - qy))
-            if d < bd:
-                bd, best = d, (p, (qx, qy))
-        p, q = best
-        # refine: nearest point of b to p, then of a to that
-        q2 = G.nearest_point_on(gb, float(p[0]), float(p[1]))
-        p2 = G.nearest_point_on(ga, float(q2[0]), float(q2[1]))
-        return G.wkb_dumps(G.point(float(p2[0]), float(p2[1])))
-
-    return pd.Series([one(x, y) for x, y in zip(a, b)])
-
-
-def st_offset_curve(dist: float):
-    """Offset a linestring by `dist` to its left (negative → right) —
-    `shapely.parallel_offset` analogue, the width-polygon primitive the
-    reference uses at `prclz/reblock/_reblock_graph.py:853-858`. Straight
-    per-segment offsets joined by clipping consecutive segments at their
-    intersection (miter joins; falls back to the bevel point when segments
-    are near-parallel)."""
-
-    @pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return None
-            g = G.wkb_loads(bytes(b))
-            lines = [g.data] if g.kind == G.LINESTRING else list(g.data)
-            out = []
-            for arr in lines:
-                arr = np.asarray(arr, dtype=np.float64)
-                if len(arr) >= 2:  # drop consecutive duplicate vertices
-                    keep = np.concatenate(
-                        [[True], np.abs(np.diff(arr, axis=0)).sum(axis=1) > 0]
-                    )
-                    arr = arr[keep]
-                if len(arr) < 2:
-                    continue
-                d = np.diff(arr, axis=0)
-                ln = np.hypot(d[:, 0], d[:, 1])
-                n = np.stack([-d[:, 1] / ln, d[:, 0] / ln], axis=1) * dist
-                p0 = arr[:-1] + n
-                p1 = arr[1:] + n
-                pts = [p0[0]]
-                for i in range(len(d) - 1):
-                    # miter: intersect offset segment i with i+1
-                    r, sgv = d[i], d[i + 1]
-                    denom = r[0] * sgv[1] - r[1] * sgv[0]
-                    if abs(denom) < 1e-12 * float(ln[i] * ln[i + 1]):
-                        pts.append(p1[i])  # bevel at near-parallel joints
-                        continue
-                    dp = p0[i + 1] - p0[i]
-                    t = (dp[0] * sgv[1] - dp[1] * sgv[0]) / denom
-                    pts.append(p0[i] + t * r)
-                pts.append(p1[-1])
-                out.append(np.asarray(pts))
-            if not out:
-                return None
-            if len(out) == 1:
-                return G.wkb_dumps(G.linestring(out[0]))
-            return G.wkb_dumps(G.multilinestring(out))
-
-        return s.map(one)
-
-    return _f
 
 
 # --- cell index functions (axis-A core, SURVEY.md §7 step 2) ---------------

@@ -169,7 +169,8 @@ def _read_coords(buf: memoryview, off: int):
 
 def _wkb_load(buf: memoryview, off: int):
     byte_order, k = struct.unpack_from("<BI", buf, off)
-    assert byte_order == 1, "big-endian WKB not supported"
+    if byte_order != 1:
+        raise ValueError("big-endian WKB not supported")
     k &= 0xFF  # strip any SRID/dimension flag bits
     off += 5
     if k == POINT:
@@ -1327,23 +1328,6 @@ def _pts_to_segs(pts: np.ndarray, segs: np.ndarray) -> np.ndarray:
     t = np.clip(((p - a) * ab).sum(-1) / l2, 0.0, 1.0)
     proj = a + t[..., None] * ab
     return np.sqrt(((p - proj) ** 2).sum(-1))
-
-
-def nearest_point_on(g: Geom, px: float, py: float):
-    """Closest point of g to (px,py) — `shapely.ops.nearest_points` analogue
-    (`prclz/reblock/_reblock.py:125-130`)."""
-    segs = _segments(g)
-    if not len(segs):
-        pts = np.vstack(_all_coords(g))
-        i = int(np.argmin(((pts - [px, py]) ** 2).sum(1)))
-        return pts[i]
-    d = _pts_to_segs(np.array([[px, py]]), segs)[0]
-    i = int(np.argmin(d))
-    a, b = segs[i, :2], segs[i, 2:]
-    ab = b - a
-    l2 = float((ab ** 2).sum()) or 1e-300
-    t = float(np.clip(np.dot([px, py] - a, ab) / l2, 0.0, 1.0))
-    return a + t * ab
 
 
 def convex_hull(pts: np.ndarray) -> np.ndarray:

@@ -64,7 +64,8 @@ def png_encode(px: np.ndarray) -> bytes:
 
 def png_decode(data: bytes) -> np.ndarray:
     """PNG bytes → HxWx3 uint8 (RGB8 non-interlaced; filters 0-4)."""
-    assert data[:8] == _PNG_SIG, "not a PNG"
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
     pos = 8
     w = h = None
     idat = []
@@ -75,7 +76,8 @@ def png_decode(data: bytes) -> np.ndarray:
         pos += 12 + ln
         if tag == b"IHDR":
             w, h, depth, ctype, _, _, interlace = struct.unpack(">IIBBBBB", payload)
-            assert depth == 8 and ctype == 2 and interlace == 0, "unsupported PNG variant"
+            if not (depth == 8 and ctype == 2 and interlace == 0):
+                raise ValueError("unsupported PNG variant")
         elif tag == b"IDAT":
             idat.append(payload)
         elif tag == b"IEND":

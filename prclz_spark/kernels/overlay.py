@@ -1,9 +1,9 @@
 """General polygon boolean overlay + buffer on the planar-arrangement core.
 
 Closes the SURVEY §2.6 gaps the reference gets from GEOS for free:
-`st_intersection` (general, `prclz/_complexity.py:33`), `st_difference` /
-`st_buffer` (`prclz/blocks/_methods.py:35-40` BufferedLineDifference),
-union, symmetric difference.
+general intersection (`prclz/_complexity.py:33`), difference / buffer
+(`prclz/blocks/_methods.py:35-40` BufferedLineDifference), union,
+symmetric difference.
 
 Algorithm (boundary-of-region, robust to disjoint/nested components where
 per-component face tracing is not):

@@ -590,12 +590,14 @@ def weak_dual_sequence_len(g0: nx.Graph, max_k: int = 64) -> int:
 # ---------------------------------------------------------------------------
 
 def _clip_halfplane_list2(xs, ys, a, b, c, px, py, dedupe=False):
-    """Fused form of :func:`_clip_halfplane_list` for the Voronoi loops:
-    additionally returns max((x-px)²+(y-py)²) over the clipped ring (the
-    r2 pruning bound) so the caller skips a Python generator pass, and
-    routes through the C module when available. Returns
-    (xs, ys, None) on identity — same ``is`` contract — or
-    (nxs, nys, r2) / ([], [], None)."""
+    """S-H step over OPEN-ring coordinate lists for the Voronoi loops —
+    bit-exact with clip_halfplane: every operation is the same IEEE double
+    op in the same order. Also returns max((x-px)²+(y-py)²) over the
+    clipped ring (the r2 pruning bound) so the caller skips a Python
+    generator pass, and routes through the C module when available.
+    Returns (xs, ys, None) on identity — the SAME list objects (callers
+    test with ``is``) — ([], [], None) when the ring is wiped, else
+    (nxs, nys, r2)."""
     norm = math.hypot(a, b)
     if norm < 1e-15:
         return xs, ys, None
@@ -616,30 +618,6 @@ def _clip_halfplane_list2(xs, ys, a, b, c, px, py, dedupe=False):
     if not nxs:
         return [], [], None
     return nxs, nys, max((x - px) ** 2 + (y - py) ** 2 for x, y in zip(nxs, nys))
-
-
-def _clip_halfplane_list(xs, ys, a, b, c, dedupe=False):
-    """S-H step over OPEN-ring coordinate lists (the voronoi hot paths) —
-    bit-exact with clip_halfplane: every operation is the same IEEE double
-    op in the same order. Returns the SAME list objects when the clip is
-    an identity (callers test with ``is``); ([], []) when the ring is
-    wiped."""
-    norm = math.hypot(a, b)
-    if norm < 1e-15:
-        return xs, ys
-    if _CF is not None and 0 < len(xs) <= 4096:
-        an, bn, cn = a / norm, b / norm, c / norm
-        r = _CF.clip_list(xs, ys, an, bn, cn, 1e-12, 1 if dedupe else 0, 0.0, 0.0)
-        if r is None:
-            return xs, ys
-        if len(r) == 0:
-            return [], []
-        return r[0], r[1]
-    a, b, c = a / norm, b / norm, c / norm
-    n = len(xs)
-    if n == 0:
-        return xs, ys
-    return _clip_halfplane_list_py(xs, ys, a, b, c, dedupe)
 
 
 def _clip_halfplane_list_py(xs, ys, a, b, c, dedupe):
@@ -1136,7 +1114,7 @@ def voronoi_cells(anchors: np.ndarray, bbox: tuple, pad: float = 1.0) -> list:
         # current cell vertex, no remaining site can cut (output identical
         # to the all-pairs loop; effective cost O(n·k) instead of O(n²)).
         # The ring lives as plain Python coordinate lists between clips
-        # (_clip_halfplane_list, dedupe=True — bit-exact with the ndarray
+        # (_clip_halfplane_list2, dedupe=True — bit-exact with the ndarray
         # path, asserted in tests); r2 is refreshed only when the ring
         # actually shrank (same value either way: an identity clip leaves
         # the max distance unchanged).
@@ -1270,7 +1248,7 @@ def voronoi_pytess(anchors: np.ndarray) -> list:
         # strictly on the keep side, and the clip's nin==n fast path
         # would return the ring unchanged — skipping is bit-exact. The
         # ring lives as plain Python coordinate lists between clips
-        # (_clip_halfplane_list): same IEEE ops, no per-clip ndarray⇄list
+        # (_clip_halfplane_list2): same IEEE ops, no per-clip ndarray⇄list
         # conversion.
         px = float(px)
         py = float(py)

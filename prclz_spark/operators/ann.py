@@ -425,15 +425,6 @@ def _pq_encode_udf(books: np.ndarray):
     return _f
 
 
-def pq_encode(
-    corpus: DataFrame, id_col: str, vec_col: str, books: np.ndarray
-) -> DataFrame:
-    """(id, pq_code binary) — m bytes per vector; NULL for zero vectors."""
-    return corpus.select(
-        F.col(id_col), _pq_encode_udf(books)(F.col(vec_col)).alias("pq_code")
-    )
-
-
 def _adc_score_udf(books: np.ndarray):
     """(query_vec, pq_code) → approximate cosine via asymmetric distance.
     Factorized on the query side (the point-probe pattern from

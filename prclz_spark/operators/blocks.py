@@ -26,9 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import geom as G
-from .. import schemas as S
 from ..kernels import planar as P
-from .sjoin import candidate_pairs
 
 _OUT_SCHEMA = "block_id string, gadm string, geometry binary, status string"
 _COLS = ["block_id", "gadm", "geometry", "status"]
@@ -71,7 +69,7 @@ def extract_blocks(
 ) -> DataFrame:
     """lines(osm_id, geometry) × gadm(gadm, geometry) → blocks.
 
-    Uses cell-candidate pairs WITHOUT the exact `st_intersects` refine
+    Uses cell-candidate pairs WITHOUT an exact line-meets-region refine
     phase: a line that shares a cover cell with the region but misses it is
     harmless to the kernel (its segments node outside the region; faces are
     kept only if their centroid falls inside the region), so the refine

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 _P = (1 << 61) - 1  # Mersenne prime for universal hashing
 _FNV = np.uint64(1099511628211)
@@ -690,10 +690,10 @@ def dedup_batch_verdict(
     commits ``survivors.select(*sig_cols)`` when its own protocol says so.
 
     ``caches``, when given, collects the internally-cached frames (batch
-    signatures + pair tables) so a LONG-RUNNING caller — the streaming
-    curation sink runs this every micro-batch — can unpersist them once
-    the commits land; without the hand-back, per-batch caches pile up in
-    the cache manager for the life of the stream.
+    signatures + pair tables) so a LONG-RUNNING caller — a session that
+    runs the curation step once per batch — can unpersist them once the
+    commits land; without the hand-back, per-batch caches pile up in the
+    cache manager for the life of the session.
 
     Exists for orchestrators that must defer the fingerprint commit: the
     curate-text CLI's crash-replay protocol appends fingerprints LAST
@@ -742,26 +742,6 @@ def dedup_batch_verdict(
     )
     survivors = batch_sigs.join(F.broadcast(dup_ids), id_col, "left_anti")
     return survivors, cross, internal, spec["cols"]
-
-
-def incremental_minhash_dedup(
-    batch_df: DataFrame,
-    table_path: str,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    bands: int = 16,
-    k: int = 5,
-    jaccard_threshold: float = 0.5,
-    compact_every: int = 16,
-):
-    """The original (round-5) minhash-only entry point — now a thin
-    wrapper over the generic tier loop. See incremental_dedup."""
-    return incremental_dedup(
-        batch_df, table_path, id_col, tier="minhash", text_col=text_col,
-        compact_every=compact_every, num_perm=num_perm, bands=bands, k=k,
-        jaccard_threshold=jaccard_threshold,
-    )
 
 
 def _token_hashes64(tokens: np.ndarray) -> np.ndarray:

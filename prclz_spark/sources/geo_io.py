@@ -125,7 +125,8 @@ def read_csv_wkt(
         total, distinct = out.select(
             F.count(assert_unique), F.countDistinct(assert_unique)
         ).first()
-        assert total == distinct, f"{assert_unique} not unique: {total} rows, {distinct} distinct"
+        if total != distinct:
+            raise ValueError(f"{assert_unique} not unique: {total} rows, {distinct} distinct")
     return out
 
 

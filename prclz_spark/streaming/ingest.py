@@ -92,43 +92,3 @@ def write_stream_to_iceberg(
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def dedup_ingest_sink(
-    table_path: str,
-    query_id: str,
-    id_col: str,
-    tier: str = "minhash",
-    on_batch=None,
-    **dedup_kwargs,
-):
-    """``foreachBatch`` callable running the full incremental-dedup loop
-    (operators.dedup.incremental_dedup: sign → against-corpus → self-dedup
-    → append survivors) EXACTLY ONCE per micro-batch: the survivor append
-    is stamped with ``{query_id, batch_id}`` and a crash-replayed batch is
-    skipped outright. Without the watermark, at-least-once foreachBatch
-    replay would re-run the loop — and since the first run already
-    appended the batch's survivors to the corpus, every replayed survivor
-    would now match ITSELF in the corpus and die, silently emptying the
-    re-delivered batch while a second failure mode (replay before the
-    first append became visible) would double-append. ``on_batch``, when
-    given, receives ``(survivors, cross, internal, snapshot, batch_id)``
-    for fresh batches (not replays) — e.g. to route survivors onward.
-    """
-    from ..operators.dedup import incremental_dedup
-    from ..sources import iceberg_lite as IL
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(os.path.join(table_path, "metadata")):
-            last = IL.last_committed_batch(table_path, query_id)
-            if last is not None and batch_id <= last:
-                return  # replayed micro-batch — survivors already landed
-        out = incremental_dedup(
-            df, table_path, id_col, tier=tier,
-            commit_properties={"query_id": query_id, "batch_id": int(batch_id)},
-            **dedup_kwargs,
-        )
-        if on_batch is not None:
-            on_batch(*out, batch_id)
-
-    return sink

@@ -206,7 +206,7 @@ def test_ivf_pq_topk_recall_and_exact_rerank(spark):
 
 
 def test_pq_encode_shape_and_zero_vectors(spark):
-    from prclz_spark.operators.ann import pq_encode, train_pq
+    from prclz_spark.operators.ann import _pq_encode_udf, train_pq
 
     e = spark.read.parquet(SF + "/embeddings.parquet").select("vec_id", "embedding")
     dim = len(e.first().embedding)
@@ -216,7 +216,7 @@ def test_pq_encode_shape_and_zero_vectors(spark):
     corpus = e.unionByName(zero)
     books = train_pq(corpus, "embedding", dim, m=8)
     assert books.shape == (8, 256, dim // 8)
-    codes = pq_encode(corpus, "vec_id", "embedding", books)
+    codes = corpus.select("vec_id", _pq_encode_udf(books)("embedding").alias("pq_code"))
     pdf = codes.toPandas().set_index("vec_id")
     # m bytes per vector — 32x smaller than the float32 array
     lens = pdf.loc[pdf.index != 99_999, "pq_code"].map(len)
@@ -224,7 +224,7 @@ def test_pq_encode_shape_and_zero_vectors(spark):
     assert pdf.loc[99_999, "pq_code"] is None
 
     # determinism: re-encoding yields identical codes
-    pdf2 = pq_encode(corpus, "vec_id", "embedding", books).toPandas().set_index("vec_id")
+    pdf2 = codes.toPandas().set_index("vec_id")
     assert (
         pdf.loc[pdf.index != 99_999, "pq_code"]
         == pdf2.loc[pdf2.index != 99_999, "pq_code"]

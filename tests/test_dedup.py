@@ -389,7 +389,7 @@ def test_incremental_minhash_dedup_loop(spark, tmp_path):
     """Round-4 VERDICT #1 'done' criteria: survivors appended as a new
     snapshot; a twin arriving in a LATER batch is caught against the
     survivors of an earlier one; duplicates never enter the table."""
-    from prclz_spark.operators.dedup import incremental_minhash_dedup
+    from prclz_spark.operators.dedup import incremental_dedup
     from prclz_spark.sources import iceberg_lite as IL
 
     corpus, batch = _split_corpus_batch(spark)
@@ -397,7 +397,9 @@ def test_incremental_minhash_dedup_loop(spark, tmp_path):
     IL.create_table(t, "doc_id bigint, sig array<bigint>")
     # day 0: the corpus enters the (empty) table — nothing to cross-match;
     # organic internal near-dups (earliest id wins) are the only losers
-    surv0, cross0, internal0, snap0 = incremental_minhash_dedup(corpus, t, "doc_id", "text")
+    surv0, cross0, internal0, snap0 = incremental_dedup(
+        corpus, t, "doc_id", tier="minhash", text_col="text"
+    )
     assert snap0 == 0 and cross0.count() == 0
     # internal losers are the transitive-closure non-representatives
     from prclz_spark.operators.components import dedup_cluster_verdict
@@ -406,7 +408,9 @@ def test_incremental_minhash_dedup_loop(spark, tmp_path):
     assert IL.read(spark, t).count() == corpus.count() - n_internal_losers
 
     # day 1: batch = 40 fresh + 20 twins; twins die, fresh survive
-    surv1, cross1, internal1, snap1 = incremental_minhash_dedup(batch, t, "doc_id", "text")
+    surv1, cross1, internal1, snap1 = incremental_dedup(
+        batch, t, "doc_id", tier="minhash", text_col="text"
+    )
     assert snap1 == 1
     planted = {int(d) + 2_000_000 for d in range(0, 100, 5)}
     caught = set(r.batch_id for r in cross1.select("batch_id").collect())
@@ -416,9 +420,9 @@ def test_incremental_minhash_dedup_loop(spark, tmp_path):
     # the table now holds day-0 + day-1 survivors; re-sending a day-1
     # SURVIVOR tomorrow is caught against yesterday's snapshot
     resend = batch.filter(F.col("doc_id").isin([int(i) for i in list(surv_ids)[:5]]))
-    _, cross2, _, _ = incremental_minhash_dedup(
+    _, cross2, _, _ = incremental_dedup(
         resend.select((F.col("doc_id") + 9_000_000).alias("doc_id"), "text"),
-        t, "doc_id", "text",
+        t, "doc_id", tier="minhash", text_col="text",
     )
     assert cross2.count() >= 5  # exact clones: jaccard_est 1.0 vs themselves
 
@@ -662,7 +666,7 @@ def test_incremental_dedup_auto_compacts(spark, tmp_path):
     """The daily loop keeps the manifest chain bounded: after more than
     compact_every appends the chain collapses to one manifest; dedup
     behavior and the table content are unchanged."""
-    from prclz_spark.operators.dedup import incremental_minhash_dedup
+    from prclz_spark.operators.dedup import incremental_dedup
     from prclz_spark.sources import iceberg_lite as IL
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -672,8 +676,8 @@ def test_incremental_dedup_auto_compacts(spark, tmp_path):
         batch = docs.filter(
             (F.col("doc_id") >= day * 20) & (F.col("doc_id") < (day + 1) * 20)
         )
-        _, _, _, snap = incremental_minhash_dedup(
-            batch, t, "doc_id", "text", compact_every=3
+        _, _, _, snap = incremental_dedup(
+            batch, t, "doc_id", tier="minhash", text_col="text", compact_every=3
         )
     chain = len(IL._manifests(t, IL.current_snapshot(t)))
     assert chain <= 3 + 1  # compacted at least once

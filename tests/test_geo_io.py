@@ -2,6 +2,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from prclz_spark import fixtures as FX
@@ -52,6 +53,10 @@ def test_csv_wkt_roundtrip(spark, tmp_path):
     rows = {r.block_id: G.wkb_loads(bytes(r.geometry)) for r in back.collect()}
     assert abs(G.area(rows["b1"]) - 1.0) < 1e-9
     assert abs(G.area(rows["b2"]) - 1.0) < 1e-9
+    dup_path = str(tmp_path / "dup_csv")
+    write_csv_wkt(blocks.unionByName(blocks.limit(1)), dup_path)
+    with pytest.raises(ValueError, match="block_id not unique: 3 rows, 2 distinct"):
+        read_csv_wkt(spark, dup_path, assert_unique="block_id")
 
 
 def test_read_reference_blocks_csv(spark):
@@ -79,23 +84,6 @@ def test_write_geojson_partitioned(spark, tmp_path):
     assert back.count() == out.count()
     line = json.loads(back.first().value)
     assert line["type"] == "Feature" and "coordinates" in line["geometry"]
-
-
-def test_st_geomfromona(spark):
-    """ONA survey text parse (prclz/utils.py:12-15): '<lat> <lon> <t> <z>'
-    tuples; polygon takes (lon, lat)."""
-    from pyspark.sql import functions as F
-
-    from prclz_spark import geom as G
-    from prclz_spark.functions.st import st_area, st_geomfromona
-
-    txt = "10.0 20.0 0 0;10.0 21.0 0 0;11.0 21.0 0 0;11.0 20.0 0 0;10.0 20.0 0 0"
-    df = spark.createDataFrame([(txt,)], "t string")
-    row = df.select(st_area(st_geomfromona(F.col("t"))).alias("a"),
-                    st_geomfromona(F.col("t")).alias("g")).collect()[0]
-    assert abs(row.a - 1.0) < 1e-12
-    g = G.wkb_loads(bytes(row.g))
-    assert g.kind == G.POLYGON and tuple(g.data[0][0]) == (20.0, 10.0)  # (lon, lat)
 
 
 def test_read_csv_wkt_malformed_rows_null_geometry(spark, tmp_path):

@@ -121,54 +121,3 @@ def test_ingest_transform_applied_before_commit(spark, tmp_path):
     got = IL.read(spark, t)
     assert got.columns == ["doc_id", "afp"]
     assert got.count() == 30 and got.filter(F.col("afp") < 0).count() == 0
-
-
-def _codes(spark, lo, hi):
-    return spark.range(lo, hi).select(
-        F.col("id").alias("doc_id"),
-        F.xxhash64(F.col("id").cast("string")).alias("phash"),
-    )
-
-
-def test_dedup_ingest_sink_exactly_once(spark, tmp_path):
-    """The incremental-dedup loop behind the batch-id watermark: a
-    crash-replayed micro-batch is skipped outright. Without the guard the
-    replay re-runs the loop and every survivor matches ITSELF in the
-    corpus (its fingerprints were appended by the first run) — shown
-    explicitly at the end."""
-    from prclz_spark.operators.dedup import incremental_dedup
-    from prclz_spark.streaming.ingest import dedup_ingest_sink
-
-    t = str(tmp_path / "tbl")
-    seen = []
-    sink = dedup_ingest_sink(
-        t, "qD", "doc_id", tier="phash",
-        on_batch=lambda surv, cross, internal, snap, bid: seen.append(
-            (bid, surv.count(), cross.count())
-        ),
-    )
-    sink(_codes(spark, 0, 50), 0)
-    assert IL.read(spark, t).count() == 50
-    snap_before = IL.current_snapshot(t)
-
-    sink(_codes(spark, 0, 50), 0)  # crash replay — skipped entirely
-    assert IL.current_snapshot(t) == snap_before
-    assert IL.read(spark, t).count() == 50
-
-    # next batch: 10 exact re-crawls (killed against the corpus) + 20 new
-    batch1 = _codes(spark, 0, 10).select(
-        (F.col("doc_id") + 9000).alias("doc_id"), "phash"
-    ).unionByName(_codes(spark, 50, 70))
-    sink(batch1, 1)
-    assert IL.read(spark, t).count() == 70
-    sink(batch1, 1)  # replay
-    assert IL.read(spark, t).count() == 70
-    assert [s[0] for s in seen] == [0, 1]  # on_batch fired once per batch
-    assert seen[1][2] == 10                # the 10 re-crawls caught
-
-    # the documented failure mode, demonstrated: an UNGUARDED replay
-    # self-matches and appends an empty snapshot
-    surv, cross, _, _ = incremental_dedup(
-        _codes(spark, 50, 70), t, "doc_id", tier="phash"
-    )
-    assert surv.count() == 0 and cross.count() == 20

@@ -69,24 +69,6 @@ def test_min_rotated_rect_and_representative_point():
     assert G.contains_point(U, p[0], p[1])
 
 
-def test_st_overlay_udfs(spark):
-    from pyspark.sql import functions as F
-
-    from prclz_spark.functions.st import st_area, st_buffer, st_difference, st_intersection
-
-    df = spark.createDataFrame(
-        [(G.wkb_dumps(A), G.wkb_dumps(B))], "ga binary, gb binary"
-    )
-    row = df.select(
-        st_area(st_intersection(F.col("ga"), F.col("gb"))).alias("inter"),
-        st_area(st_difference(F.col("ga"), F.col("gb"))).alias("diff"),
-        st_area(st_buffer(-0.5)(F.col("ga"))).alias("eroded"),
-    ).collect()[0]
-    assert abs(row.inter - 1.0) < 1e-9
-    assert abs(row.diff - 3.0) < 1e-9
-    assert abs(row.eroded - 1.0) < 1e-9
-
-
 def test_union_all_two_phase(spark):
     """A5: distributed two-phase unary_union — a 4×4 grid of unit cells
     (shuffled across partitions) unions to the exact 4×4 square."""
@@ -105,30 +87,6 @@ def test_union_all_two_phase(spark):
     rows2 = rows + [(99, G.wkb_dumps(G.box(10, 10, 11, 11)))]
     u2 = union_all(spark.createDataFrame(rows2, "id long, geometry binary").repartition(5))
     assert abs(G.area(u2) - 17.0) < 1e-9
-
-
-def test_st_linemerge(spark):
-    from pyspark.sql import functions as F
-
-    from prclz_spark.functions.st import st_geometrytype, st_length, st_linemerge
-
-    mls = G.multilinestring(
-        [
-            [(0, 0), (1, 0)],
-            [(1, 0), (2, 0)],
-            [(2, 0), (2, 1)],
-            [(5, 5), (6, 5)],  # disconnected piece
-        ]
-    )
-    df = spark.createDataFrame([(G.wkb_dumps(mls),)], "g binary")
-    row = df.select(
-        st_geometrytype(st_linemerge(F.col("g"))).alias("t"),
-        st_length(st_linemerge(F.col("g"))).alias("l"),
-    ).collect()[0]
-    assert row.t == "MULTILINESTRING" and abs(row.l - 4.0) < 1e-12
-    out = G.wkb_loads(bytes(df.select(st_linemerge(F.col("g")).alias("m")).collect()[0].m))
-    lens = sorted(len(l) for l in out.data)
-    assert len(out.data) == 2 and lens == [2, 4]  # one 3-seg chain + the stub
 
 
 # --- noder: bucketed-grid candidates ≡ all-pairs, and the <1s scale gate ----

@@ -14,7 +14,7 @@ from prclz_spark.operators.blocks import extract_blocks
 from prclz_spark.operators.complexity import building_centroids, k_complexity
 from prclz_spark.operators.knn import knn_join, within_distance_join
 from prclz_spark.operators.parcels import tessellate
-from prclz_spark.operators.sjoin import pip_join, sjoin_pairs
+from prclz_spark.operators.sjoin import pip_join
 
 NX = 6
 
@@ -37,20 +37,6 @@ def test_pip_join_closed_form(spark, world):
         i = min(1, int((r.x - x0) // wx))
         j = min(1, int((r.y - y0) // wy))
         assert r.gadm == f"TST.{i+1}.{j+1}_1"
-
-
-def test_sjoin_vs_bruteforce(spark, world):
-    lines, gadm, bldgs, res = world
-    pairs = sjoin_pairs(lines, gadm, "osm_id", "gadm", res=res).toPandas()
-    lp, gp = lines.toPandas(), gadm.toPandas()
-    truth = {
-        (lr.osm_id, gr.gadm)
-        for _, lr in lp.iterrows()
-        for _, gr in gp.iterrows()
-        if G.intersects(G.wkb_loads(bytes(lr.geometry)), G.wkb_loads(bytes(gr.geometry)))
-    }
-    got = set(map(tuple, pairs[["osm_id", "gadm"]].values))
-    assert got == truth
 
 
 def test_knn_vs_bruteforce(spark):
@@ -241,23 +227,6 @@ def test_parcels_orphan_reunion_kernel():
     for osm, bg in (("A", A), ("B", B)):
         c = G.centroid(bg)
         assert G.contains_point(geoms[osm], c[0], c[1])
-
-
-def test_sjoin_how_right(spark, world):
-    """J2: geopandas sjoin how='right' — keep unmatched build rows."""
-    from prclz_spark.operators.sjoin import sjoin
-
-    lines, gadm, bldgs, res = world
-    # add a region nothing intersects
-    extra = spark.createDataFrame(
-        [("TST.FAR_1", G.wkb_dumps(G.box(99.0, 99.0, 99.1, 99.1)))],
-        "gadm string, geometry binary",
-    )
-    gadm2 = gadm.unionByName(extra, allowMissingColumns=True)
-    out = sjoin(lines, gadm2, "osm_id", "gadm", res=res, how="right").toPandas()
-    far = out[out.gadm == "TST.FAR_1"]
-    assert len(far) == 1 and far.osm_id.isna().all()  # kept, null probe attrs
-    assert out[out.gadm != "TST.FAR_1"].osm_id.notna().all()
 
 
 def test_street_graph_parquet_roundtrip(spark, tmp_path):
